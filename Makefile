@@ -1,16 +1,23 @@
 # Developer entry points. The test suite itself needs nothing but the
 # baked-in Python deps; the live-* targets add dockerized services for
 # the env-gated Postgres/Neo4j legs in tests/test_live_sinks.py.
+# `test` is the tier-1 command from ROADMAP.md; `perfbench` runs the
+# benchmark's own tests, then one run of its `live` workload.
 
 COMPOSE ?= docker compose
 
-.PHONY: test bench live-env live-test live-down
+.PHONY: test bench perfbench live-env live-test live-down
 
 test:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py
+
+perfbench:
+	python3 -m pytest perfbench/tests -q
+	python3 perfbench/run.py --workload live --seed 101 --seconds 15
 
 # Start the live services and leave them up (for iterating on the legs
 # by hand with TEST_POSTGRES_DSN / TEST_NEO4J_URI exported).

@@ -48,8 +48,8 @@ def get_spark(
         # scale-adaptive by construction, env-overridable for clusters
         # that want the stock value. Measured (r10 A/B, 37-query heavy
         # subset, fresh JVM per config, min of 2): 141.3 s -> 119.5 s.
-        # Re-validated in the r11 four-arm decomposition (scripts/
-        # ab_floor_r11.py): this floor alone is within noise of stock on
+        # Re-validated in the r11 four-arm decomposition
+        # (OPTIMIZATION_r11.md): this floor alone is within noise of stock on
         # the 32-query small set (27.0 vs 26.7 s; tpch22 15.4 vs 15.6)
         # and carries the heavy-family win (61.5 vs 64.6 s) — the r10
         # small-query tax came from the open-cost floor, reverted below.
@@ -67,11 +67,11 @@ def get_spark(
         # Scan-split open cost: STOCK 4 MiB (round-11 revert of the
         # round-10 128 KiB floor). The r10 floor split every sub-128 MiB
         # file cores-wide, which helped scan-rooted dense compute — but
-        # the r11 four-arm interleaved same-JVM A/B (scripts/
-        # ab_floor_r11.py: stock / r10 / aqe-floor-only / open-floor-
-        # only over 32 small + 24 heavy queries, 4 passes, arm order
-        # rotated) showed the open-cost floor was the ENTIRE small-query
-        # tax the r10 driver bench measured (tpch22: stock 15.6 s,
+        # the r11 four-arm interleaved same-JVM A/B (OPTIMIZATION_r11.md:
+        # stock / r10 / aqe-floor-only / open-floor-only over 32 small +
+        # 24 heavy queries, 4 passes, arm order rotated) showed the
+        # open-cost floor was the ENTIRE small-query tax the r10 bench
+        # measured (tpch22: stock 15.6 s,
         # open-floor 18.0, both-floors 18.5, aqe-floor-only 15.4) while
         # the AQE floor below alone captures the heavy-family win
         # (heavy-24: stock 64.6 s, aqe-only 61.5, both 61.2): extra

@@ -28,13 +28,14 @@ Storage layout & scale:
 
 Crash safety (single writer per table, like the reference's
 one-importer-per-table topology): each touched bucket is swapped by
-rename via a ``.old-<epoch>`` holding area. A crash can leave a bucket
-missing from ``data/``; ``_recover()`` — run on open and before every
-upsert — rolls such buckets back from ``.old-*`` and clears stale
-staging, so the sink never silently restarts empty. A partially-swapped
-batch (some buckets new, some rolled back) is converged by re-running
-the batch: the ledger only commits after ``upsert`` returns, and the
-recency guard makes the re-merge idempotent.
+rename via a ``.old-<epoch>`` holding area. A crash can leave buckets
+missing from ``data/``, or ``data/`` itself missing when every bucket
+had been moved out; ``_recover()`` — run on open and before every
+upsert — moves each ``.old-*`` bucket with no live counterpart back into
+``data/`` and clears stale staging, so the sink never silently restarts
+empty. A partially-swapped batch (some buckets new, some rolled back) is
+converged by re-running the batch: the ledger only commits after
+``upsert`` returns, and the recency guard makes the re-merge idempotent.
 """
 
 from __future__ import annotations
@@ -69,52 +70,37 @@ class LakeUpsertSink:
 
     # -- crash recovery ----------------------------------------------------
     def _recover(self) -> None:
-        """Roll back any interrupted swap: restore buckets (or a whole
-        legacy data dir) left in ``.old-*``, drop stale staging dirs."""
+        """Roll back any interrupted swap: restore buckets left in
+        ``.old-*`` that have no live counterpart, drop stale staging dirs."""
         if not os.path.isdir(self.root):
             return
         for name in sorted(os.listdir(self.root)):
             path = os.path.join(self.root, name)
             if name.startswith(".old-"):
-                if not os.path.isdir(self._data_dir):
-                    os.rename(path, self._data_dir)
-                    continue
                 for sub in os.listdir(path):
-                    if sub.startswith(f"{_BUCKET}="):
-                        dst = os.path.join(self._data_dir, sub)
-                        if not os.path.exists(dst):
-                            # crash between rename-out and rename-in
-                            os.rename(os.path.join(path, sub), dst)
+                    dst = os.path.join(self._data_dir, sub)
+                    if sub.startswith(f"{_BUCKET}=") and not os.path.exists(dst):
+                        # crash between rename-out and rename-in
+                        os.makedirs(self._data_dir, exist_ok=True)
+                        os.rename(os.path.join(path, sub), dst)
                 shutil.rmtree(path)
             elif name.startswith(".staging-"):
                 shutil.rmtree(path)
 
     # -- read --------------------------------------------------------------
     def exists(self) -> bool:
-        """True iff the sink holds DATA — bucket dirs or parquet files.
-        A zero-row first upsert writes a data dir containing only
-        ``_SUCCESS``; counting that as existing bricks the sink (the
-        schemaless ``spark.read.parquet`` on it throws
-        UNABLE_TO_INFER_SCHEMA on every later read), so marker-only
-        dirs read as empty and the next non-empty upsert takes the
-        fresh-sink full-swap path."""
-        if not os.path.isdir(self._data_dir):
-            return False
-        return any(
-            n.startswith(f"{_BUCKET}=") or n.endswith(".parquet")
-            for n in os.listdir(self._data_dir)
-        )
-
-    def _is_bucketed(self) -> bool:
-        return any(
+        """True iff the sink holds data, i.e. at least one bucket dir. A
+        zero-row upsert leaves ``data/`` without one, and the schemaless
+        ``spark.read.parquet`` on it would throw UNABLE_TO_INFER_SCHEMA on
+        every later read, so such a sink reads as empty."""
+        return os.path.isdir(self._data_dir) and any(
             n.startswith(f"{_BUCKET}=") for n in os.listdir(self._data_dir)
         )
 
     def read(self) -> DataFrame | None:
         if not self.exists():
             return None
-        df = self.spark.read.parquet(self._data_dir)
-        return df.drop(_BUCKET) if _BUCKET in df.columns else df
+        return self.spark.read.parquet(self._data_dir).drop(_BUCKET)
 
     # -- write -------------------------------------------------------------
     def _order(self) -> list[Column]:
@@ -151,85 +137,55 @@ class LakeUpsertSink:
         return os.path.join(self.root, "_sink_meta.json")
 
     def _check_meta(self) -> None:
-        """Pin (n_buckets, pk) across reopens: a sink reopened with a
-        different n_buckets hashes updated PKs into different buckets,
-        the merge never sees the old version, and read() returns
-        duplicate PKs forever — silently. First write records the
-        layout; every later open asserts it."""
+        """Pin (n_buckets, pk, version_column) across reopens: a sink
+        reopened with a different n_buckets hashes updated PKs into
+        different buckets, the merge never sees the old version, and
+        read() returns duplicate PKs forever — silently; a different
+        version_column silently changes which row survives a PK collision
+        over already-stored data. First write records the layout; every
+        later open asserts it."""
         import json
 
         path = self._meta_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                meta = json.load(f)
-            if meta.get("n_buckets") != self.n_buckets or tuple(
-                meta.get("primary_key", ())
-            ) != tuple(self.primary_key):
-                raise ValueError(
-                    f"sink at {self.root!r} was written with "
-                    f"n_buckets={meta.get('n_buckets')}, "
-                    f"pk={tuple(meta.get('primary_key', ()))}; reopened "
-                    f"with n_buckets={self.n_buckets}, "
-                    f"pk={tuple(self.primary_key)} — a layout change "
-                    "requires a rewrite, not a reopen"
-                )
-            # version_column drives the last-writer-wins recency guard;
-            # reopening with a different one silently changes which row
-            # survives a PK collision over already-stored data — the same
-            # class of divergence the meta file exists to prevent. Meta
-            # files written before this key existed are upgraded in place.
-            if "version_column" not in meta:
-                meta["version_column"] = self.version_column
-                with open(path, "w") as f:
-                    json.dump(meta, f)
-            elif meta["version_column"] != self.version_column:
-                raise ValueError(
-                    f"sink at {self.root!r} was written with "
-                    f"version_column={meta['version_column']!r}; reopened "
-                    f"with {self.version_column!r} — a recency-guard "
-                    "change requires a rewrite, not a reopen"
-                )
-        else:
+        want = {
+            "n_buckets": self.n_buckets,
+            "primary_key": list(self.primary_key),
+            "version_column": self.version_column,
+        }
+        if not os.path.exists(path):
             os.makedirs(self.root, exist_ok=True)
             with open(path, "w") as f:
-                json.dump(
-                    {
-                        "n_buckets": self.n_buckets,
-                        "primary_key": list(self.primary_key),
-                        "version_column": self.version_column,
-                    },
-                    f,
-                )
+                json.dump(want, f)
+            return
+        with open(path) as f:
+            meta = json.load(f)
+        if meta != want:
+            raise ValueError(
+                f"sink at {self.root!r} was written with "
+                f"n_buckets={meta.get('n_buckets')}, "
+                f"pk={tuple(meta.get('primary_key', ()))}, "
+                f"version_column={meta.get('version_column')!r}; reopened "
+                f"with n_buckets={self.n_buckets}, "
+                f"pk={tuple(self.primary_key)}, "
+                f"version_column={self.version_column!r} — a layout or "
+                "recency-guard change requires a rewrite, not a reopen"
+            )
 
     def _upsert_inner(self, batch: DataFrame, epoch: int) -> None:
-        pk = list(self.primary_key)
-        full_swap = False
-        if not self.exists():
-            merged = batch.drop("__src_priority")
-            full_swap = True
-        elif not self._is_bucketed():
-            # one-time migration of a legacy unpartitioned table: full
-            # merge + full rewrite into the bucketed layout
-            existing = (
-                self.read()
-                .withColumn("__src_priority", F.lit(0))
-                .withColumn(_BUCKET, self._bucket_expr())
-            )
-            merged = last_writer_wins(
-                existing.unionByName(batch), pk, self._order()
-            ).drop("__src_priority")
-            full_swap = True
-        else:
+        merged = batch
+        if self.exists():
             # touched buckets only: one tiny driver-side distinct (at most
             # n_buckets ints — control-plane, not data)
             touched = sorted(
                 r[0] for r in batch.select(_BUCKET).distinct().collect()
             )
-            bucket_dirs = [
-                os.path.join(self._data_dir, f"{_BUCKET}={b}")
-                for b in touched
+            live = [
+                p
+                for p in (
+                    os.path.join(self._data_dir, f"{_BUCKET}={b}") for b in touched
+                )
+                if os.path.isdir(p)
             ]
-            live = [p for p in bucket_dirs if os.path.isdir(p)]
             if live:
                 existing = (
                     self.spark.read.option("basePath", self._data_dir)
@@ -237,29 +193,21 @@ class LakeUpsertSink:
                     .withColumn("__src_priority", F.lit(0))
                 )
                 merged = last_writer_wins(
-                    existing.unionByName(batch), pk, self._order()
-                ).drop("__src_priority")
-            else:
-                merged = batch.drop("__src_priority")
+                    existing.unionByName(batch), list(self.primary_key), self._order()
+                )
 
         staging = os.path.join(self.root, f".staging-{epoch}")
         if os.path.isdir(staging):
             shutil.rmtree(staging)
-        merged.write.partitionBy(_BUCKET).mode("overwrite").parquet(staging)
-
-        if full_swap:
-            old = os.path.join(self.root, f".old-{epoch}")
-            if os.path.isdir(self._data_dir):
-                os.rename(self._data_dir, old)
-            os.rename(staging, self._data_dir)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            return
+        merged.drop("__src_priority").write.partitionBy(_BUCKET).mode(
+            "overwrite"
+        ).parquet(staging)
 
         # per-bucket swap: only directories for buckets in this batch move;
         # everything else is untouched on disk
         old = os.path.join(self.root, f".old-{epoch}")
         os.makedirs(old, exist_ok=True)
+        os.makedirs(self._data_dir, exist_ok=True)
         for sub in sorted(os.listdir(staging)):
             if not sub.startswith(f"{_BUCKET}="):
                 continue

@@ -19,10 +19,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .filenames import ParquetFileMeta, parse_parquet_filename, window_file_name
+from .filenames import parse_parquet_filename, window_file_name
 
 
 @dataclass(frozen=True)
@@ -156,18 +156,6 @@ def plan_windows(
         missing_windows=missing,
         next_start=t,
     )
-
-
-def read_windows(spark: SparkSession, plan: WindowPlan, schema=None) -> DataFrame | None:
-    """One distributed scan over every selected window file. Returns None
-    when the plan has no non-empty files (the all-.empty case)."""
-    paths = ([plan.full_path] if plan.full_path else []) + plan.incremental_paths
-    if not paths:
-        return None
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*paths)
 
 
 def attach_file_metadata(df: DataFrame) -> DataFrame:

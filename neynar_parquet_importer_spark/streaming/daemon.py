@@ -22,6 +22,7 @@ filename, import that one file, mark it completed.
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 from dataclasses import dataclass
@@ -187,8 +188,6 @@ def direct_import(
     is recorded like any window but completion is committed directly (a
     direct import is an operator override, not part of the in-order
     stream)."""
-    import os
-
     meta = parse_parquet_filename(path)
     if spec is None:
         spec = spec_for_file(path)
@@ -202,29 +201,9 @@ def direct_import(
         incremental_duration=meta.duration_s or 1,
         filter_doc=filter_doc,
     )
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    df = spark.read.schema(spec.schema).parquet(path)
-    obs = Observation()
-    out = pipe.transform(df).observe(obs, F.count(F.lit(1)).alias("n"))
-    # count rides the upsert's first action — no dedicated count pass
-    pipe.sink.upsert(out, epoch=int(time.time()))
-    rows = int(obs.get["n"])
-    from ..sinks.ledger import LedgerEntry
-
+    rows = pipe.import_files([path], time.time())
     name = path.rsplit("/", 1)[-1]
-    pipe.ledger.record_file(
-        LedgerEntry(
-            file_name=name,
-            file_type="full" if meta.is_full else "incremental",
-            file_version="v3",
-            file_duration_s=meta.duration_s,
-            start_timestamp=meta.start_timestamp,
-            end_timestamp=meta.end_timestamp,
-            backfill=False,
-        )
-    )
+    pipe.ledger.record_file(pipe.ledger_entry(name))
     pipe.ledger.advance_completed_through([name], {name})
     return ImportReport(
         files_imported=1,

@@ -11,26 +11,26 @@ Reference behavior being preserved (SURVEY §2.8):
 - W10 sink-as-state: latest-row-per-PK state lives in the sink via the
   recency-guarded upsert, not in an engine state store.
 
-Two execution modes:
-- ``ImportPipeline.run_catchup``: batch catch-up — ONE distributed scan
-  over all pending window files, filter -> clean -> upsert, then ledger
-  commit. This replaces the reference's file-at-a-time thread pools; at
-  100 TB the backfill is a single parquet scan job whose parallelism is
-  file-splits, not Python threads.
-- ``streaming_window_counts``: Structured Streaming file-source variant
-  (readStream + tumbling window + watermark) for continuously-arriving
-  files, with ``Trigger.AvailableNow`` for catch-up and foreachBatch for
-  upsert sinks.
+One import path: ``ImportPipeline.run_catchup`` plans the pending
+windows, ``import_files`` reads them as ONE distributed scan (filter ->
+clean -> upsert), and the ledger then commits them in order. This
+replaces the reference's file-at-a-time thread pools; at 100 TB the
+backfill is a single parquet scan job whose parallelism is file-splits,
+not Python threads. ``daemon.direct_import`` runs the same body on one
+file.
+
+The Structured Streaming helpers at the bottom (``streaming_dedup``,
+``streaming_enrich``, ``streaming_window_counts``) are analytics over
+continuously-arriving files; they write neither the lake nor the ledger.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..filters import compile_filter
@@ -41,7 +41,13 @@ from ..sinks.lake_upsert import LakeUpsertSink
 from ..sinks.ledger import ImportLedger, LedgerEntry
 from ..sources.filenames import parse_parquet_filename, window_file_name
 from ..sources.windows import _exists as windows_exists
-from ..sources.windows import plan_windows, read_windows
+from ..sources.windows import plan_windows
+from .metrics import (
+    MetricsEmitter,
+    collect_metrics,
+    compute_unit_cost,
+    emit_batch_metrics,
+)
 
 
 @dataclass
@@ -90,9 +96,9 @@ class ImportPipeline:
         self.duration = incremental_duration
         self.predicate: Column = compile_filter(filter_doc)
         self.filters_active = bool(filter_doc)
-        # statsd-shaped metrics seam (reference db.py:918-936); None = no
-        # emission, the observe aggregates are skipped entirely
-        self.emitter = emitter
+        # statsd-shaped metrics seam (reference db.py:918-936); the default
+        # is the no-op emitter
+        self.emitter = emitter if emitter is not None else MetricsEmitter()
         self.cu_metric = cu_metric
         self.cost_per_row = cost_per_row
         self.publish_eta_offset = publish_eta_offset
@@ -102,7 +108,7 @@ class ImportPipeline:
         )
         self.ledger = ImportLedger(f"{sink_root}/{spec.name}/ledger.jsonl")
 
-    # -- the per-batch body shared by batch and streaming (SURVEY §7.1) ----
+    # -- the per-batch body (SURVEY §7.1) ------------------------------------
     def transform(self, df: DataFrame) -> DataFrame:
         out = df.filter(self.predicate)
         out = clean_json_columns(out, self.spec.json_columns)
@@ -160,101 +166,20 @@ class ImportPipeline:
             if force or not self.ledger.is_completed(p.rsplit("/", 1)[-1])
         ]
 
-        rows = 0
-        if pending:
-            df = self.spark.read.schema(self.spec.schema).parquet(*pending)
-            if self.emitter is not None:
-                from pyspark.sql import Observation
-
-                from .metrics import (
-                    collect_metrics,
-                    compute_unit_cost,
-                    emit_batch_metrics,
-                )
-
-                obs_scanned, obs_kept = Observation(), Observation()
-                df = df.observe(obs_scanned, F.count(F.lit(1)).alias("n"))
-                out = self.transform(df).observe(
-                    obs_kept,
-                    F.count(F.lit(1)).alias("n"),
-                    F.max(F.col(self.spec.version_column).cast("double")).alias(
-                        "max_v"
-                    ),
-                )
-                # the upsert's first action populates both Observations —
-                # a separate out.count() here would pay one whole extra
-                # scan+transform pass over every pending file just for
-                # the row count
-                self.sink.upsert(out, epoch=int(now))
-                rows = int(obs_kept.get["n"])
-                window_end = max(
-                    parse_parquet_filename(p.rsplit("/", 1)[-1]).end_timestamp
-                    for p in pending
-                )
-                max_v = obs_kept.get["max_v"]
-                m = collect_metrics(
-                    obs_scanned,
-                    obs_kept,
-                    window_end_ts=float(window_end),
-                    max_updated_at_ts=None if max_v is None else float(max_v),
-                    now=now,
-                )
-                cost = (
-                    compute_unit_cost(m, self.cost_per_row, self.filters_active)
-                    if self.cu_metric is not None
-                    else None
-                )
-                emit_batch_metrics(
-                    self.emitter, m, self.spec.name, cost, self.cu_metric
-                )
-            else:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                out = self.transform(df).observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                )
-                # row count rides the upsert's own first action instead
-                # of a dedicated count pass (one less full read+transform
-                # of the pending window set per catch-up)
-                self.sink.upsert(out, epoch=int(now))
-                rows = int(obs.get["n"])
+        rows = self.import_files(pending, now) if pending else 0
 
         # ledger: record data files + empty sentinels, then commit in
         # order — one fsync for the whole batch (deferred_sync): at 17-18
         # tables of 1-second windows per host, per-append fsyncs contend
         # on the shared filesystem journal across every importer process
         with self.ledger.deferred_sync():
-            ordered_names: list[str] = []
-            for path in pending:
-                name = path.rsplit("/", 1)[-1]
-                meta = parse_parquet_filename(name)
-                self.ledger.record_file(
-                    LedgerEntry(
-                        file_name=name,
-                        file_type="full" if meta.is_full else "incremental",
-                        file_version=self.file_version,
-                        file_duration_s=meta.duration_s,
-                        start_timestamp=meta.start_timestamp,
-                        end_timestamp=meta.end_timestamp,
-                        backfill=backfill,
-                    )
-                )
-                ordered_names.append(name)
-            for t in plan.empty_windows:
-                name = window_file_name(self.schema_name, self.spec.name, t, self.duration, empty=True)
-                self.ledger.record_file(
-                    LedgerEntry(
-                        file_name=name,
-                        file_type="incremental",
-                        file_version=self.file_version,
-                        file_duration_s=self.duration,
-                        start_timestamp=t,
-                        end_timestamp=t + self.duration,
-                        backfill=backfill,
-                    )
-                )
-                ordered_names.append(name)
+            names = [p.rsplit("/", 1)[-1] for p in pending] + [
+                window_file_name(self.schema_name, self.spec.name, t, self.duration, empty=True)
+                for t in plan.empty_windows
+            ]
+            entries = [self.ledger_entry(n, backfill) for n in names]
+            for entry in entries:
+                self.ledger.record_file(entry)
 
             # in-order commit (W7): everything in this batch succeeded
             # together, but completion must never jump an expected-yet-
@@ -264,13 +189,11 @@ class ImportPipeline:
             # they'll be re-read next run) but stay uncommitted so
             # resume_point() cannot advance past the gap: a late-published
             # window is re-planned and imported, not lost.
-            min_missing = min(plan.missing_windows) if plan.missing_windows else None
-            ordered_names.sort(key=lambda n: parse_parquet_filename(n).end_timestamp)
+            min_missing = min(plan.missing_windows, default=None)
             commit_names = [
-                n
-                for n in ordered_names
-                if min_missing is None
-                or parse_parquet_filename(n).end_timestamp <= min_missing
+                e.file_name
+                for e in sorted(entries, key=lambda e: e.end_timestamp)
+                if min_missing is None or e.end_timestamp <= min_missing
             ]
             self.ledger.advance_completed_through(commit_names, set(commit_names))
 
@@ -282,6 +205,47 @@ class ImportPipeline:
             next_start=plan.next_start,
         )
 
+    def import_files(self, paths: list[str], now: float) -> int:
+        """Scan ``paths`` as one job, ``transform`` them and upsert the
+        result; returns the rows kept. Rows scanned, rows kept and the
+        newest version are observed on the upsert's own first action — a
+        separate count would pay one whole extra scan+transform pass — and
+        emitted through ``self.emitter``."""
+        obs_scanned, obs_kept = Observation(), Observation()
+        df = self.spark.read.schema(self.spec.schema).parquet(*paths)
+        out = self.transform(
+            df.observe(obs_scanned, F.count(F.lit(1)).alias("n"))
+        ).observe(
+            obs_kept,
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.col(self.spec.version_column).cast("double")).alias("max_v"),
+        )
+        self.sink.upsert(out, epoch=int(now))
+        max_v = obs_kept.get["max_v"]
+        m = collect_metrics(
+            obs_scanned,
+            obs_kept,
+            window_end_ts=float(max(parse_parquet_filename(p).end_timestamp for p in paths)),
+            max_updated_at_ts=None if max_v is None else float(max_v),
+            now=now,
+        )
+        cost = compute_unit_cost(m, self.cost_per_row, self.filters_active)
+        emit_batch_metrics(self.emitter, m, self.spec.name, cost, self.cu_metric)
+        return m.rows_imported
+
+    def ledger_entry(self, file_name: str, backfill: bool = False) -> LedgerEntry:
+        """The ledger row for a window file (data or ``.empty``), from its
+        name."""
+        meta = parse_parquet_filename(file_name)
+        return LedgerEntry(
+            file_name=file_name,
+            file_type="full" if meta.is_full else "incremental",
+            file_version=self.file_version,
+            file_duration_s=meta.duration_s,
+            start_timestamp=meta.start_timestamp,
+            end_timestamp=meta.end_timestamp,
+            backfill=backfill,
+        )
 
     def run_backfill(
         self,
@@ -372,30 +336,6 @@ class ImportPipeline:
                 shutdown.wait(nap)
             else:
                 sleep_fn(nap)
-
-    def run_streaming(self, checkpoint_dir: str, available_now: bool = True):
-        """Structured Streaming leg: file source over the window directory,
-        the same ``transform`` body, foreachBatch -> recency-guarded upsert
-        (exactly-once end state = checkpoint replay + idempotent MERGE,
-        the two-system story of SURVEY §7.3 hard part 2). `.empty` sentinel
-        files are not valid parquet, so the glob selects only ``*.parquet``;
-        empty windows are a ledger-only concern handled by run_catchup."""
-        stream = (
-            self.spark.readStream.schema(self.spec.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(self.source_dir)
-        )
-
-        def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-            self.sink.upsert(self.transform(batch_df), epoch=batch_id)
-
-        writer = (
-            stream.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
 
 def streaming_dedup(

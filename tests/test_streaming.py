@@ -1,50 +1,14 @@
-"""Structured Streaming tests: AvailableNow catch-up through foreachBatch
-upsert, checkpoint-based resume without re-processing, and the tumbling
-window aggregate."""
+"""Structured Streaming helpers: the tumbling window aggregate, in-stream
+dedup within the watermark, and the stream-static enrichment join."""
 
 from __future__ import annotations
 
 import datetime
 import os
 
-import pytest
 from pyspark.sql import types as T
 
-from neynar_parquet_importer_spark.streaming import ImportPipeline, streaming_window_counts
-from tests.test_pipeline import SPEC, _row, _write_window
-
-
-@pytest.fixture()
-def stream_env(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _write_window(spark, src, 0, 1000, [_row(1, 10, 20, 500)])
-    _write_window(spark, src, 1000, 1, [_row(1, 10, 99, 1000), _row(2, 11, 21, 1000)])
-    pipe = ImportPipeline(spark, SPEC, src, str(tmp_path / "lake"), incremental_duration=1)
-    return pipe, src, str(tmp_path / "ckpt")
-
-
-def test_streaming_available_now_upserts(stream_env):
-    pipe, src, ckpt = stream_env
-    q = pipe.run_streaming(ckpt)
-    q.awaitTermination(120)
-    state = {r.id: r.target_fid for r in pipe.sink.read().collect()}
-    assert state == {"id-1": 99, "id-2": 21}  # newer window won for id-1
-
-
-def test_streaming_checkpoint_resume(stream_env, spark):
-    pipe, src, ckpt = stream_env
-    pipe.run_streaming(ckpt).awaitTermination(120)
-    first = sorted((r.id, r.target_fid) for r in pipe.sink.read().collect())
-
-    # restart with same checkpoint: no files re-processed, state unchanged
-    pipe.run_streaming(ckpt).awaitTermination(120)
-    assert sorted((r.id, r.target_fid) for r in pipe.sink.read().collect()) == first
-
-    # a new window arriving is picked up on the next run
-    _write_window(spark, src, 1001, 1, [_row(3, 12, 22, 1001)])
-    pipe.run_streaming(ckpt).awaitTermination(120)
-    assert pipe.sink.read().count() == 3
+from neynar_parquet_importer_spark.streaming import streaming_window_counts
 
 
 def test_streaming_window_counts(spark, tmp_path):

@@ -110,23 +110,39 @@ def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path):
     assert untouched and all(before[k] == after[k] for k in untouched)
 
 
-def test_upsert_crash_recovery_rolls_back(spark, tmp_path):
-    """A bucket renamed out but never replaced (crash mid-swap) is restored
-    by the next open instead of silently restarting empty."""
+def _crash_one_bucket(data, old):
+    """The per-bucket swap's crash window: one bucket moved to .old,
+    nothing swapped in."""
     import os
-    import shutil
+
+    victim = next(n for n in os.listdir(data) if n.startswith("__bucket="))
+    os.makedirs(old)
+    os.rename(os.path.join(data, victim), os.path.join(old, victim))
+
+
+def _crash_all_buckets(data, old):
+    """``data/`` gone with every bucket in .old — the shape a crash in the
+    middle of a whole-table swap leaves."""
+    import os
+
+    os.rename(data, old)
+
+
+@pytest.mark.parametrize(
+    "crash", [_crash_one_bucket, _crash_all_buckets], ids=["one_bucket", "all_buckets"]
+)
+def test_upsert_crash_recovery_rolls_back(spark, tmp_path, crash):
+    """Buckets renamed out but never replaced (crash mid-swap) are restored
+    by the next open instead of the sink silently restarting empty."""
+    import os
 
     root = str(tmp_path / "tbl")
     sink = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=4)
     sink.upsert(_df(spark, [(i, f"v{i}", _ts(1)) for i in range(1, 9)]), epoch=1)
     before = _state(sink)
 
-    # simulate the crash window: a bucket moved to .old, nothing swapped in
-    data = sink._data_dir
-    victim = next(n for n in os.listdir(data) if n.startswith("__bucket="))
     old = os.path.join(root, ".old-99")
-    os.makedirs(old)
-    os.rename(os.path.join(data, victim), os.path.join(old, victim))
+    crash(sink._data_dir, old)
     os.makedirs(os.path.join(root, ".staging-99"))  # stale staging too
 
     sink2 = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=4)
@@ -333,7 +349,7 @@ def test_empty_first_upsert_does_not_brick_sink(spark, sink):
     sink.upsert(empty, epoch=1)
     assert sink.exists() is False
     assert sink.read() is None
-    # a later real upsert takes the fresh-sink path and works
+    # a later real upsert lands in an empty data dir and works
     sink.upsert(_df(spark, [(1, "a", _ts(1))]), epoch=2)
     assert _state(sink) == {1: ("a", _ts(1))}
     # empty upsert onto LIVE state is a no-op, not a wipe
@@ -398,27 +414,6 @@ def test_reopen_with_different_version_column_raises(spark, tmp_path):
     reopened = LakeUpsertSink(spark, root, ("id",), "id", n_buckets=8)
     with pytest.raises(ValueError, match="version_column='updated_at'"):
         reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
-
-
-def test_meta_missing_version_column_upgrades_in_place(spark, tmp_path):
-    """Meta files written before version_column existed upgrade on the
-    next open instead of bricking the sink."""
-    import json
-    import os
-
-    root = str(tmp_path / "tbl")
-    sink = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=8)
-    sink.upsert(_df(spark, [(1, "a", _ts(1))]), epoch=1)
-    meta_path = os.path.join(root, "_sink_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["version_column"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    reopened = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=8)
-    reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
-    with open(meta_path) as f:
-        assert json.load(f)["version_column"] == "updated_at"
 
 
 def test_ledger_deferred_sync_batches_fsyncs(tmp_path, monkeypatch):
