@@ -166,6 +166,27 @@ def test_direct_import_single_file(spark, tmp_path):
     assert {r.id for r in sink.read().collect()} == {"x"}
 
 
+def test_direct_import_counts_kept_rows_and_commits(spark, tmp_path):
+    """direct_import runs the catch-up import body: under a filter the
+    report counts the rows kept, not the rows scanned, and the file is
+    recorded and committed in the table's ledger."""
+    from neynar_parquet_importer_spark.sinks.ledger import ImportLedger
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _write_window(spark, src, 100, 110, [("x", 1, 2, _ts(105)), ("y", 20, 3, _ts(106))])
+    name = "nindexer-follows-100-110.parquet"
+    lake = str(tmp_path / "lake")
+    report = direct_import(
+        spark, os.path.join(src, name), lake, spec=SPEC, filter_doc={"data.fid": {"$lt": 12}}
+    )
+    assert report.files_imported == 1 and report.rows_upserted == 1
+    ledger = ImportLedger(os.path.join(lake, "follows", "ledger.jsonl"))
+    assert ledger.is_completed(name)
+    pipe = ImportPipeline(spark, SPEC, src, lake)
+    assert {r.id for r in pipe.sink.read().collect()} == {"x"}
+
+
 def test_spec_for_file_resolves_catalog_tables():
     from neynar_parquet_importer_spark.streaming.daemon import spec_for_file
 

@@ -271,3 +271,24 @@ def test_catchup_emits_reference_metric_series(spark, tmp_path):
     assert by_metric[("gauge", "parquet_file_age_s")][0] == pytest.approx(3999.0)
     assert ("gauge", "parquet_row_age_s") in by_metric
     assert all(t == (f"table:{SPEC.name}",) for _, t in by_metric.values())
+
+
+def test_ledger_entry_from_window_file_names(spark, tmp_path):
+    """Every ledger row is built from its file name alone: an incremental
+    window, the full snapshot and an ``.empty`` sentinel."""
+    pipe = ImportPipeline(spark, SPEC, str(tmp_path / "src"), str(tmp_path / "lake"))
+
+    def shape(e):
+        return (e.file_type, e.file_version, e.file_duration_s, e.start_timestamp, e.end_timestamp, e.backfill)
+
+    assert shape(pipe.ledger_entry("nindexer-follows-1000-1001.parquet")) == (
+        "incremental", "v3", 1, 1000, 1001, False,
+    )
+    assert shape(pipe.ledger_entry("nindexer-follows-0-1000.parquet", backfill=True)) == (
+        "full", "v3", 1000, 0, 1000, True,
+    )
+    empty = window_file_name("nindexer", "follows", 1001, 1, empty=True)
+    entry = pipe.ledger_entry(empty)
+    assert entry.file_name == empty
+    assert shape(entry) == ("incremental", "v3", 1, 1001, 1002, False)
+    assert not entry.completed

@@ -1,10 +1,12 @@
 """Stateful streaming sessionization (applyInPandasWithState): sessions
 close on gap within a batch and on later-batch evidence; state persists
-across micro-batches (maxFilesPerTrigger=1 forces multiple batches)."""
+across micro-batches (maxFilesPerTrigger=1 forces multiple batches); idle
+sessions are flushed by the processing-time timeout."""
 
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,7 +27,7 @@ def test_sessionize_stream_multi_batch(spark, tmp_path):
         [(1, 1000), (1, 1010), (1, 5000)], SCHEMA
     ).coalesce(1).write.parquet(os.path.join(src, "f1"))
     # batch file 2: user 1 again far later (closes the 5000 session),
-    # user 2 appears (stays open -> not emitted)
+    # user 2 appears (both stay open until the idle timeout flushes them)
     spark.createDataFrame(
         [(1, 10000), (2, 7000)], SCHEMA
     ).coalesce(1).write.parquet(os.path.join(src, "f2"))
@@ -35,7 +37,11 @@ def test_sessionize_stream_multi_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    out = sessionize_stream(stream, gap_s=1800)
+    # a 1 s idle timeout flushes the still-open sessions soon after the
+    # data batches; the query never terminates on its own (every trigger
+    # schedules a no-data batch for the processing-time timeout), so the
+    # test waits for all four sessions and stops it
+    out = sessionize_stream(stream, gap_s=1800, idle_timeout_ms=1000)
     q = (
         out.writeStream.format("memory")
         .queryName("sessions")
@@ -43,20 +49,30 @@ def test_sessionize_stream_multi_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    rows = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events)
-        for r in spark.sql("select * from sessions").collect()
+
+    def sessions():
+        return {
+            (r.user_id, r.session_start): (r.session_end, r.n_events)
+            for r in spark.sql("select * from sessions").collect()
+        }
+
+    deadline = time.monotonic() + 180
+    try:
+        rows = sessions()
+        while len(rows) < 4 and time.monotonic() < deadline:
+            assert q.exception() is None
+            time.sleep(0.5)
+            rows = sessions()
+    finally:
+        q.stop()
+    assert rows == {
+        # closed by in-batch gap: [1000,1010]; closed by batch-2 event: [5000]
+        (1, 1000): (1010, 2),
+        (1, 5000): (5000, 1),
+        # still open after the last batch, flushed by the idle timeout
+        (1, 10000): (10000, 1),
+        (2, 7000): (7000, 1),
     }
-    # closed by in-batch gap: [1000,1010]; closed by batch-2 event: [5000]
-    assert rows[(1, 1000)] == (1010, 2)
-    assert rows[(1, 5000)] == (5000, 1)
-    # still-open sessions may be flushed by the idle processing-time
-    # timeout before the query drains; if emitted they must be intact
-    if (1, 10000) in rows:
-        assert rows[(1, 10000)] == (10000, 1)
-    if (2, 7000) in rows:
-        assert rows[(2, 7000)] == (7000, 1)
 
 
 class _FakeState:
