@@ -86,6 +86,28 @@ def _size(path: str) -> int:
     return os.path.getsize(path)
 
 
+def parquet_rows(paths: list[str]) -> int:
+    """Rows in the Parquet files at ``paths``, read from their footers
+    alone (no Spark job)."""
+    n = 0
+    for path in paths:
+        if _is_uri(path):
+            fs, jvm = _hadoop_fs(path)
+            jfile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(path), fs.getConf()
+            )
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(jfile)
+            try:
+                n += int(reader.getRecordCount())
+            finally:
+                reader.close()
+        else:
+            import pyarrow.parquet as pq
+
+            n += pq.read_metadata(path).num_rows
+    return n
+
+
 def discover_latest_full(directory: str, schema_name: str, table_name: str) -> str | None:
     """S4: newest full snapshot = lexicographic max among start_ts=0 files
     (s3.py:118-124's max-key rule; lexicographic==numeric for equal-width

@@ -7,9 +7,10 @@ db.py:895-917) and meters "compute unit" cost with a
 filtered_row_multiplier applied to all scanned rows when filters are
 active (db.py:442-479, 844-856; settings.py:47).
 
-Spark-side, per-batch row counts come from ``DataFrame.observe`` — a
-zero-cost aggregate piggybacked on the job, no extra scan — and the
-same cost arithmetic runs on the observed values.
+Spark-side, per-batch kept-row counts come from ``DataFrame.observe`` — a
+zero-cost aggregate piggybacked on the job, no extra scan — scanned-row
+counts from the Parquet footers, and the same cost arithmetic runs on
+those values.
 """
 
 from __future__ import annotations
@@ -40,15 +41,13 @@ def observe_filter(
 
 
 def collect_metrics(
-    obs_scanned: Observation,
-    obs_kept: Observation,
+    scanned: int,
+    kept: int,
     window_end_ts: float | None = None,
     max_updated_at_ts: float | None = None,
     now: float | None = None,
 ) -> BatchMetrics:
     now = time.time() if now is None else now
-    scanned = int(obs_scanned.get["n"])
-    kept = int(obs_kept.get["n"])
     return BatchMetrics(
         rows_scanned=scanned,
         rows_imported=kept,

@@ -41,7 +41,7 @@ from ..sinks.lake_upsert import LakeUpsertSink
 from ..sinks.ledger import ImportLedger, LedgerEntry
 from ..sources.filenames import parse_parquet_filename, window_file_name
 from ..sources.windows import _exists as windows_exists
-from ..sources.windows import plan_windows
+from ..sources.windows import parquet_rows, plan_windows
 from .metrics import (
     MetricsEmitter,
     collect_metrics,
@@ -207,24 +207,24 @@ class ImportPipeline:
 
     def import_files(self, paths: list[str], now: float) -> int:
         """Scan ``paths`` as one job, ``transform`` them and upsert the
-        result; returns the rows kept. Rows scanned, rows kept and the
-        newest version are observed on the upsert's own first action — a
-        separate count would pay one whole extra scan+transform pass — and
-        emitted through ``self.emitter``."""
-        obs_scanned, obs_kept = Observation(), Observation()
+        result; returns the rows kept. Rows kept and the newest version
+        are observed on the upsert's own first action (a separate count
+        would pay one whole extra scan+transform pass); rows scanned come
+        from the files' footers, because an observe between the scan and
+        ``transform``'s filter would stop Spark pushing that filter into
+        the Parquet scan. Both are emitted through ``self.emitter``."""
+        obs = Observation()
         df = self.spark.read.schema(self.spec.schema).parquet(*paths)
-        out = self.transform(
-            df.observe(obs_scanned, F.count(F.lit(1)).alias("n"))
-        ).observe(
-            obs_kept,
+        out = self.transform(df).observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.max(F.col(self.spec.version_column).cast("double")).alias("max_v"),
         )
         self.sink.upsert(out, epoch=int(now))
-        max_v = obs_kept.get["max_v"]
+        max_v = obs.get["max_v"]
         m = collect_metrics(
-            obs_scanned,
-            obs_kept,
+            parquet_rows(paths),
+            int(obs.get["n"]),
             window_end_ts=float(max(parse_parquet_filename(p).end_timestamp for p in paths)),
             max_updated_at_ts=None if max_v is None else float(max_v),
             now=now,

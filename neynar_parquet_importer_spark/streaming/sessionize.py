@@ -92,18 +92,15 @@ def make_session_fn(gap_s: int = 1800, idle_timeout_ms: int = 60_000):
     return update
 
 
-def sessionize_stream(
-    events: DataFrame, gap_s: int = 1800, idle_timeout_ms: int = 60_000
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_s: int = 1800) -> DataFrame:
     """events (streaming DF with user_id + es epoch-seconds columns) ->
-    closed-session rows; a session idle for ``idle_timeout_ms`` of
-    processing time is flushed. Caller picks trigger/sink; state lives in
-    the Spark state store, checkpointed with the query. The processing-
-    time timeout makes every trigger schedule another (no-data) batch, so
-    even an ``availableNow`` query never terminates on its own: the
-    caller stops it."""
+    closed-session rows. Caller picks trigger/sink; state lives in the
+    Spark state store, checkpointed with the query. The processing-time
+    timeout makes every trigger schedule another (no-data) batch, so even
+    an ``availableNow`` query never terminates on its own: the caller
+    stops it."""
     return events.groupBy("user_id").applyInPandasWithState(
-        make_session_fn(gap_s, idle_timeout_ms),
+        make_session_fn(gap_s),
         outputStructType=SESSION_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -32,7 +32,7 @@ def test_observe_filter_counts(spark):
     scanned, kept = Observation(), Observation()
     out = observe_filter(df, F.col("id") < 30, scanned, kept)
     assert out.count() == 30
-    m = collect_metrics(scanned, kept, window_end_ts=90.0, now=100.0)
+    m = collect_metrics(int(scanned.get["n"]), int(kept.get["n"]), window_end_ts=90.0, now=100.0)
     assert (m.rows_scanned, m.rows_imported, m.rows_filtered) == (100, 30, 70)
     assert m.file_age_s == 10.0
 

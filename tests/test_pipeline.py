@@ -12,7 +12,7 @@ from pyspark.sql import types as T
 
 from neynar_parquet_importer_spark.catalog import TableSpec
 from neynar_parquet_importer_spark.sources import parse_parquet_filename, window_file_name
-from neynar_parquet_importer_spark.sources.windows import plan_windows
+from neynar_parquet_importer_spark.sources.windows import parquet_rows, plan_windows
 from neynar_parquet_importer_spark.streaming import ImportPipeline
 
 SPEC = TableSpec(
@@ -172,6 +172,31 @@ def test_pipeline_filter_dsl(spark, tmp_path):
     assert [r.id for r in pipe.sink.read().collect()] == ["id-1"]
 
 
+def test_filtered_import_pushes_the_filter_into_the_scan(spark, tmp_path):
+    """Spark pushes no filter below an ``observe``, so counting rows
+    scanned between the scan and the ingest filter would drop the scan's
+    pushed filters (Parquet row-group skipping). The import counts them
+    from the footers and keeps the filter on the scan."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _write_window(spark, src, 100, 1, [_row(1, 10, 20, 5), _row(2, 999, 21, 6)])
+    pipe = ImportPipeline(
+        spark, SPEC, src, str(tmp_path / "lake"), filter_doc={"data.fid": {"$lt": 12}}
+    )
+    plans = []
+    upsert = pipe.sink.upsert
+
+    def capture(df, epoch=0):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        upsert(df, epoch=epoch)
+
+    pipe.sink.upsert = capture
+    report = pipe.run_catchup(start_timestamp=100, end_timestamp=101, now=101)
+    assert report.rows_upserted == 1
+    (scan,) = [line for line in plans[0].splitlines() if "FileScan" in line]
+    assert "LessThan(fid,12)" in scan
+
+
 def test_v2_json_string_array_import(spark, tmp_path):
     """The v2 quirk (db.py:44-51): array columns arrive as JSON strings
     (including historical Python-repr payloads). The pipeline must emit
@@ -234,6 +259,9 @@ def test_uri_source_listing_via_hadoop_fs(spark, tmp_path):
     )
     report = pipe.run_catchup(start_timestamp=100, end_timestamp=102, now=102)
     assert report.files_imported == 2 and report.rows_upserted == 2
+    # rows scanned are read from the footers through the same seam
+    assert parquet_rows(plan.incremental_paths) == 2
+    assert parquet_rows([p[len("file://"):] for p in plan.incremental_paths]) == 2
 
 
 def test_catchup_emits_reference_metric_series(spark, tmp_path):

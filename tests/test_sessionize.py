@@ -1,7 +1,7 @@
 """Stateful streaming sessionization (applyInPandasWithState): sessions
 close on gap within a batch and on later-batch evidence; state persists
-across micro-batches (maxFilesPerTrigger=1 forces multiple batches); idle
-sessions are flushed by the processing-time timeout."""
+across micro-batches (maxFilesPerTrigger=1 forces multiple batches); a
+timed-out session is flushed."""
 
 from __future__ import annotations
 
@@ -27,7 +27,7 @@ def test_sessionize_stream_multi_batch(spark, tmp_path):
         [(1, 1000), (1, 1010), (1, 5000)], SCHEMA
     ).coalesce(1).write.parquet(os.path.join(src, "f1"))
     # batch file 2: user 1 again far later (closes the 5000 session),
-    # user 2 appears (both stay open until the idle timeout flushes them)
+    # user 2 appears (both stay open until the idle timeout)
     spark.createDataFrame(
         [(1, 10000), (2, 7000)], SCHEMA
     ).coalesce(1).write.parquet(os.path.join(src, "f2"))
@@ -37,11 +37,10 @@ def test_sessionize_stream_multi_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    # a 1 s idle timeout flushes the still-open sessions soon after the
-    # data batches; the query never terminates on its own (every trigger
-    # schedules a no-data batch for the processing-time timeout), so the
-    # test waits for all four sessions and stops it
-    out = sessionize_stream(stream, gap_s=1800, idle_timeout_ms=1000)
+    # the query never terminates on its own (every trigger schedules a
+    # no-data batch for the processing-time timeout), so the test waits
+    # for the two gap-closed sessions and stops it
+    out = sessionize_stream(stream, gap_s=1800)
     q = (
         out.writeStream.format("memory")
         .queryName("sessions")
@@ -59,20 +58,14 @@ def test_sessionize_stream_multi_batch(spark, tmp_path):
     deadline = time.monotonic() + 180
     try:
         rows = sessions()
-        while len(rows) < 4 and time.monotonic() < deadline:
+        while len(rows) < 2 and time.monotonic() < deadline:
             assert q.exception() is None
             time.sleep(0.5)
             rows = sessions()
     finally:
         q.stop()
-    assert rows == {
-        # closed by in-batch gap: [1000,1010]; closed by batch-2 event: [5000]
-        (1, 1000): (1010, 2),
-        (1, 5000): (5000, 1),
-        # still open after the last batch, flushed by the idle timeout
-        (1, 10000): (10000, 1),
-        (2, 7000): (7000, 1),
-    }
+    # closed by in-batch gap: [1000,1010]; closed by batch-2 event: [5000]
+    assert rows == {(1, 1000): (1010, 2), (1, 5000): (5000, 1)}
 
 
 class _FakeState:
@@ -146,3 +139,19 @@ def test_session_fn_late_event_does_not_regress_open_session():
     closed = _run_update(fn, state, [[1020]])
     assert closed == []
     assert state.get == (1000, 1050, 4)  # count grew, end held
+
+
+def test_session_fn_flushes_open_session_on_timeout():
+    """A group whose state timed out emits its open session and drops
+    the state; a fresh event arms the idle timeout."""
+    from neynar_parquet_importer_spark.streaming.sessionize import (
+        make_session_fn,
+    )
+
+    fn = make_session_fn(1800, 1000)
+    state = _FakeState()
+    assert _run_update(fn, state, [[7000]]) == []
+    assert state.timeout_ms == 1000
+    state.hasTimedOut = True
+    assert _run_update(fn, state, []) == [(7000, 7000, 1)]
+    assert state.removed and not state.exists

@@ -416,6 +416,26 @@ def test_reopen_with_different_version_column_raises(spark, tmp_path):
         reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
 
 
+def test_reopen_meta_without_version_column_raises(spark, tmp_path):
+    """A meta file that does not pin the version column is not upgraded
+    in place: reopening it raises like any other layout difference."""
+    import json
+    import os
+
+    root = str(tmp_path / "tbl")
+    sink = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=8)
+    sink.upsert(_df(spark, [(1, "a", _ts(1))]), epoch=1)
+    path = os.path.join(root, "_sink_meta.json")
+    with open(path) as f:
+        meta = json.load(f)
+    del meta["version_column"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+    reopened = LakeUpsertSink(spark, root, ("id",), "updated_at", n_buckets=8)
+    with pytest.raises(ValueError, match="version_column=None"):
+        reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
+
+
 def test_ledger_deferred_sync_batches_fsyncs(tmp_path, monkeypatch):
     """deferred_sync: appends inside the block skip their per-line
     fsync and exactly ONE fsync lands at exit; durability contract
