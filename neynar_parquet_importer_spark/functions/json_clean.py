@@ -7,12 +7,12 @@ tries ast.literal_eval when the string starts with ``[{'`` or ``{'``,
 else orjson.loads. Unit-tested against an escaped-quote case
 (tests/test_db.py:4-12).
 
-Spark mapping: well-formed JSON goes through the native ``from_json``
-(JVM, codegen); only the Python-repr fallback needs Python, and it runs
-as an Arrow-batched pandas UDF applied *conditionally* so the JVM fast
-path handles the overwhelmingly common case. At 100 TB the pandas UDF
-only ever sees the tiny slice of rows whose payload starts with a
-Python-repr prefix.
+Spark mapping: well-formed JSON is validated by the native
+``try_parse_json`` (JVM, codegen); only the Python-repr fallback needs
+Python, and it runs as an Arrow-batched pandas UDF. The UDF sits in a
+``CASE WHEN`` on the repr prefix, but Spark extracts Python UDFs out of
+conditionals into an ``ArrowEvalPython`` node that evaluates every row,
+so every row of a JSON column makes the Python round trip.
 """
 
 from __future__ import annotations
@@ -68,10 +68,11 @@ def parse_json_column(col: Column | str, on_error: str = "null") -> Column:
 
     JVM fast path for real JSON — *validated* with ``try_parse_json``
     (codegen'd; the reference orjson.loads-es every payload and raises on
-    garbage, db.py:261-282). The pandas-UDF fallback runs only where the
-    value has the Python-repr prefix (db.py:268-272's startswith check,
-    expressed as a predicate so Catalyst short-circuits the UDF for normal
-    rows).
+    garbage, db.py:261-282). The pandas-UDF fallback's result is used only
+    where the value has the Python-repr prefix (db.py:268-272's startswith
+    check), but the UDF itself runs on every row: Spark evaluates Python
+    UDFs in a separate ``ArrowEvalPython`` node ahead of the ``CASE WHEN``,
+    which short-circuits nothing.
 
     Malformed payloads (garbage fast-path strings AND unparseable repr
     strings) become NULL with ``on_error='null'`` — count them with
@@ -99,8 +100,8 @@ def parse_json_column(col: Column | str, on_error: str = "null") -> Column:
 
 def json_parse_failed(col: Column | str) -> Column:
     """Predicate: non-null input that failed cleaning. Feed to
-    ``DataFrame.observe``/``observe_filter`` for a failure counter
-    (quarantine-count alternative to ``on_error='raise'``)."""
+    ``DataFrame.observe`` for a failure counter (quarantine-count
+    alternative to ``on_error='raise'``)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.isNotNull() & parse_json_column(c).isNull()
 

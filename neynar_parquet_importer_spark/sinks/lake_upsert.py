@@ -22,9 +22,12 @@ Storage layout & scale:
   same thing with file-level pruning);
 - untouched bucket directories are not opened, rewritten, or renamed —
   their files stay byte-identical (asserted by tests);
-- the merge itself is one shuffle on the PK within touched buckets;
-  incoming batches are deduped per PK *before* merging (SURVEY §7.3 hard
-  part 1).
+- the merge is one shuffle on ``__bucket`` over the touched buckets, so
+  a bucket's rows sit in one task and every commit writes one file per
+  touched bucket. Touched buckets bound the merge's parallelism: size
+  ``n_buckets`` to at least the core count. Incoming batches are deduped
+  per PK *before* merging (SURVEY §7.3 hard part 1), also over a bucket
+  shuffle.
 
 Crash safety (single writer per table, like the reference's
 one-importer-per-table topology): each touched bucket is swapped by
@@ -114,10 +117,17 @@ class LakeUpsertSink:
             F.lit(self.n_buckets),
         ).cast("int")
 
+    def _newest_per_pk(self, df: DataFrame) -> DataFrame:
+        """One row per PK over one shuffle on the bucket: the bucket is a
+        function of the PK, so (bucket, pk) groups are the PK groups, and
+        each bucket's rows land in one task, which writes one file."""
+        return last_writer_wins(
+            df.repartition(_BUCKET), [_BUCKET, *self.primary_key], self._order()
+        )
+
     def upsert(self, incoming: DataFrame, epoch: int = 0) -> None:
         self._recover()
         self._check_meta()
-        pk = list(self.primary_key)
         # persist: the batch is evaluated TWICE (the touched-bucket
         # collect, then the merged staging write). Unpinned, the second
         # evaluation re-runs the whole upstream plan — and if that plan
@@ -125,9 +135,11 @@ class LakeUpsertSink:
         # it can emit a bucket that was not in `touched`, whose existing
         # directory was never merged: the per-bucket swap would then
         # replace it with only new rows, silently deleting stored PKs.
-        batch = last_writer_wins(
-            incoming.withColumn("__src_priority", F.lit(1)), pk, self._order()
-        ).withColumn(_BUCKET, self._bucket_expr()).persist()
+        batch = self._newest_per_pk(
+            incoming.withColumn("__src_priority", F.lit(1)).withColumn(
+                _BUCKET, self._bucket_expr()
+            )
+        ).persist()
         try:
             self._upsert_inner(batch, epoch)
         finally:
@@ -192,9 +204,7 @@ class LakeUpsertSink:
                     .parquet(*live)
                     .withColumn("__src_priority", F.lit(0))
                 )
-                merged = last_writer_wins(
-                    existing.unionByName(batch), list(self.primary_key), self._order()
-                )
+                merged = self._newest_per_pk(existing.unionByName(batch))
 
         staging = os.path.join(self.root, f".staging-{epoch}")
         if os.path.isdir(staging):

@@ -41,6 +41,15 @@ class LedgerEntry:
     imported_at: float = field(default_factory=lambda: time.time())
 
 
+def _is_complete(line: bytes) -> bool:
+    """A line as ``_append`` writes it: one JSON document and its newline."""
+    try:
+        json.loads(line)
+    except ValueError:
+        return False
+    return line.endswith(b"\n")
+
+
 class ImportLedger:
     def __init__(self, path: str) -> None:
         self.path = path
@@ -53,12 +62,22 @@ class ImportLedger:
     def _load(self) -> None:
         if not os.path.exists(self.path):
             return
-        with open(self.path) as f:
-            for line in f:
-                if line.strip():
-                    self._live_lines += 1
-                    e = LedgerEntry(**json.loads(line))
-                    self._entries[e.file_name] = e  # last line wins
+        with open(self.path, "rb") as f:
+            lines = f.readlines()
+        if lines and not _is_complete(lines[-1]):
+            # a crash mid-append (flushed, not yet fsynced under
+            # deferred_sync) can tear the last line and only that one:
+            # drop it, and cut the file back to the last complete line so
+            # the next append does not glue onto the fragment
+            lines.pop()
+            with open(self.path, "r+b") as f:
+                f.truncate(sum(map(len, lines)))
+                os.fsync(f.fileno())
+        for line in lines:
+            if line.strip():
+                self._live_lines += 1
+                e = LedgerEntry(**json.loads(line))
+                self._entries[e.file_name] = e  # last line wins
         # a restart is the natural compaction point: collapse history when
         # dead (superseded) lines dominate
         if self._live_lines > 2 * max(len(self._entries), 16):

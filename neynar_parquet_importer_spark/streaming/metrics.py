@@ -18,9 +18,6 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
-
 
 @dataclass
 class BatchMetrics:
@@ -29,15 +26,6 @@ class BatchMetrics:
     rows_filtered: int
     file_age_s: float | None = None
     row_age_s: float | None = None
-
-
-def observe_filter(
-    df: DataFrame, predicate, obs_scanned: Observation, obs_kept: Observation
-) -> DataFrame:
-    """filter + observed pre/post counts in one pass (F10's counting,
-    db.py:827-867, without the reference's per-row Python loop)."""
-    observed = df.observe(obs_scanned, F.count(F.lit(1)).alias("n"))
-    return observed.filter(predicate).observe(obs_kept, F.count(F.lit(1)).alias("n"))
 
 
 def collect_metrics(

@@ -1,10 +1,7 @@
-"""Control-plane tests: observe()-based metrics + cost metering, graph
-MERGE statement builders, DDL generation."""
+"""Control-plane tests: batch metrics + cost metering, graph MERGE
+statement builders, DDL generation."""
 
 from __future__ import annotations
-
-from pyspark.sql import Observation
-from pyspark.sql import functions as F
 
 from neynar_parquet_importer_spark.catalog import REFERENCE_TABLES
 from neynar_parquet_importer_spark.graph.writer import (
@@ -23,16 +20,11 @@ from neynar_parquet_importer_spark.streaming.metrics import (
     BatchMetrics,
     collect_metrics,
     compute_unit_cost,
-    observe_filter,
 )
 
 
-def test_observe_filter_counts(spark):
-    df = spark.range(100)
-    scanned, kept = Observation(), Observation()
-    out = observe_filter(df, F.col("id") < 30, scanned, kept)
-    assert out.count() == 30
-    m = collect_metrics(int(scanned.get["n"]), int(kept.get["n"]), window_end_ts=90.0, now=100.0)
+def test_collect_metrics_counts():
+    m = collect_metrics(100, 30, window_end_ts=90.0, now=100.0)
     assert (m.rows_scanned, m.rows_imported, m.rows_filtered) == (100, 30, 70)
     assert m.file_age_s == 10.0
 

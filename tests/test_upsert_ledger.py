@@ -110,6 +110,41 @@ def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path):
     assert untouched and all(before[k] == after[k] for k in untouched)
 
 
+def test_upsert_writes_one_file_per_bucket(spark, tmp_path):
+    """The merge shuffles on the bucket, so each bucket is one task's one
+    file: on a fresh sink and again when merging into stored buckets
+    (a PK shuffle would write one file per shuffle partition). The rows
+    carry a hash payload, which compresses poorly, so that AQE keeps
+    several shuffle partitions."""
+    import os
+
+    sink = LakeUpsertSink(spark, str(tmp_path / "tbl"), ("id",), "updated_at", n_buckets=8)
+
+    def rows(lo, hi, day):
+        return spark.range(lo, hi).select(
+            "id",
+            F.concat(*[F.sha2(F.concat_ws(s, F.lit(day), "id"), 512) for s in "ab"]).alias("v"),
+            F.lit(_ts(day)).alias("updated_at"),
+        )
+
+    def files_per_bucket():
+        data = sink._data_dir
+        return {
+            d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(data, d)))
+            for d in os.listdir(data)
+            if d.startswith("__bucket=")
+        }
+
+    sink.upsert(rows(0, 4000, 1), epoch=1)
+    first = files_per_bucket()
+    assert len(first) == 8 and set(first.values()) == {1}
+    sink.upsert(rows(2000, 6000, 2), epoch=2)
+    second = files_per_bucket()
+    assert len(second) == 8 and set(second.values()) == {1}
+    st = _state(sink)
+    assert len(st) == 6000 and st[0][1] == _ts(1) and st[5999][1] == _ts(2)
+
+
 def _crash_one_bucket(data, old):
     """The per-bucket swap's crash window: one bucket moved to .old,
     nothing swapped in."""
@@ -210,6 +245,32 @@ def test_ledger_in_order_commit(tmp_path):
     # once the gap fills, the rest commit in order
     committed = led.advance_completed_through(names, done | {names[1]})
     assert committed == names[1:]
+
+
+def test_ledger_torn_last_line_is_dropped_on_reopen(tmp_path):
+    """A crash mid-append leaves half a last line: the reopen drops it and
+    truncates the file, so the restart resumes and later appends reload."""
+    path = tmp_path / "l.jsonl"
+    led = ImportLedger(str(path))
+    names = [f"s-t-{i}-{i+1}.parquet" for i in range(3)]
+    for i, n in enumerate(names):
+        led.record_file(LedgerEntry(n, "incremental", "v3", 1, i, i + 1))
+    led.advance_completed_through(names[:2], set(names[:2]))
+    raw = path.read_bytes()
+    last = raw.rstrip(b"\n").rfind(b"\n") + 1  # start of the last line
+    path.write_bytes(raw[: last + (len(raw) - last) // 2])
+
+    led2 = ImportLedger(str(path))
+    # the torn line was names[1]'s completion: its window re-imports
+    assert led2.resume_point() == 1
+    assert path.read_bytes() == raw[:last]
+    led2.advance_completed_through(names, set(names))
+    assert ImportLedger(str(path)).resume_point() == 3
+
+    # only the last line may be torn: a bad line before it still raises
+    path.write_bytes(raw[:last] + b"{not json\n" + raw[last:])
+    with pytest.raises(ValueError):
+        ImportLedger(str(path))
 
 
 def test_ledger_staleness(tmp_path):
