@@ -66,8 +66,7 @@ def oriented_edges(
     right for dimension-keyed graphs like co-suppliers), but on a
     billion-node follows graph pass False and let the two decorations
     shuffle-join — the explicit hint would otherwise force an OOM
-    regardless of autoBroadcastJoinThreshold (same knob discipline as
-    ``bloom.bloom_probe``'s broadcast_words).
+    regardless of autoBroadcastJoinThreshold.
 
     ``deg``: pass an already-(persisted) ``degrees(edges)`` frame to
     share it; without one the two broadcast decorations below are

@@ -102,7 +102,6 @@ def bloom_probe(
     k: int = 4,
     id_col: str,
     flag_col: str = "maybe_in_bloom",
-    broadcast_words: bool = True,
 ) -> DataFrame:
     """``df`` + a boolean ``flag_col``: true iff all k probe bits are set.
 
@@ -111,14 +110,9 @@ def bloom_probe(
     positives occur at ~``bloom_fpr`` rate and are resolved by the exact
     confirmation join the caller runs on the flagged slice.
 
-    ``broadcast_words=True`` (default) hints the words table broadcast —
-    right whenever the filter fits an executor (up to a few hundred MB of
-    words).  Spark honors an explicit hint regardless of
-    ``autoBroadcastJoinThreshold``, so for filters past broadcast range
-    (~12 GB of words for 10 B docs at 1 % FPR) pass ``False``: the probe
-    degrades to a plain shuffled equi-join on ``word_idx`` (AQE may still
-    choose broadcast at runtime if the table turns out small — a sized
-    decision, not a forced one).
+    The words table is hinted broadcast, which Spark honors regardless
+    of ``autoBroadcastJoinThreshold``: the filter must fit an executor
+    (up to a few hundred MB of words).
     """
     probes = df.select(
         F.col(id_col),
@@ -131,9 +125,8 @@ def bloom_probe(
     hit = F.col("word").isNotNull() & (
         F.expr("shiftright(word, bit) & 1L") == 1
     )
-    words = F.broadcast(bloom) if broadcast_words else bloom
     flags = (
-        probes.join(words, "word_idx", "left")
+        probes.join(F.broadcast(bloom), "word_idx", "left")
         .select(id_col, hit.alias("hit"))
         .groupBy(id_col)
         .agg(F.bool_and("hit").alias(flag_col))
@@ -143,7 +136,7 @@ def bloom_probe(
     # "definitely new" filter does NOT re-admit the same NULL-content
     # rows batch after batch (the one duplicate class a false-flag
     # would permanently exempt from dedup); callers wanting verdicts on
-    # NULL rows split them first (streaming.bloom_dedup's discipline)
+    # NULL rows split them off first
     return df.join(flags, id_col, "left").withColumn(
         flag_col,
         F.when(
@@ -160,7 +153,6 @@ def bloom_filter_new(
     n_bits: int = 1 << 15,
     k: int = 4,
     id_col: str,
-    broadcast_words: bool = True,
 ) -> DataFrame:
     """Rows of ``df`` that are DEFINITELY absent from the filtered history.
 
@@ -169,8 +161,7 @@ def bloom_filter_new(
     true duplicates plus an ~FPR-sized sliver of false positives.
     """
     flagged = bloom_probe(
-        df, content_col, bloom, n_bits=n_bits, k=k, id_col=id_col,
-        broadcast_words=broadcast_words,
+        df, content_col, bloom, n_bits=n_bits, k=k, id_col=id_col
     )
     return flagged.filter(~F.col("maybe_in_bloom")).drop("maybe_in_bloom")
 

@@ -48,12 +48,12 @@ def md5_signed64(c: Column) -> Column:
 # after consuming a near-dup result (bench and tests do).
 #
 # The registries are THREAD-LOCAL: driver-side concurrency in this repo is
-# thread-per-pipeline (daemon.run_tables_forever, parallel streaming
-# folds), and a shared list would let one pipeline's cleanup unpersist —
-# or worse, release the truncated-lineage checkpoints of — another
-# pipeline's in-flight frames. Each thread releases exactly what it
-# created; frames belonging to a finished thread are reclaimed by the
-# ContextCleaner when the frames are garbage collected.
+# thread-per-pipeline (daemon.run_tables_forever), and a shared list
+# would let one pipeline's cleanup unpersist — or worse, release the
+# truncated-lineage checkpoints of — another pipeline's in-flight frames.
+# Each thread releases exactly what it created; frames belonging to a
+# finished thread are reclaimed by the ContextCleaner when the frames are
+# garbage collected.
 _TLS = threading.local()
 
 
@@ -406,9 +406,8 @@ def minhash_lsh_candidates(
     # by Catalyst on every run for each side (r10 interleaved A/B, min
     # of 4 at sf0.1: ckpt 2.34 s vs persist 2.47 s for the md5 pipeline,
     # ckpt 3.59 vs 4.10 for the LSH+rerank pipeline). A frame the
-    # CALLER already PERSISTED (the streaming fold's per-batch
-    # signature frame) is used as-is — re-checkpointing it would build
-    # a second full copy plus one blocking job per batch. NOTE: the
+    # CALLER already PERSISTED is used as-is — re-checkpointing it
+    # would build a second full copy plus one blocking job. NOTE: the
     # storageLevel probe only detects persisted frames — a caller-
     # localCheckpoint'ed frame reports StorageLevel.NONE (verified
     # empirically in this session's Spark) and would get a redundant
@@ -476,7 +475,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
-    max_shingle_df: int | float | None = None,
     hot: DataFrame | None = None,
     capped_sets: DataFrame | None = None,
 ) -> DataFrame:
@@ -489,14 +487,11 @@ def ngram_jaccard_pairs(
     vanishing fraction of the corpus and shingling everything would
     dominate the query.
 
-    ``max_shingle_df`` applies the SAME stop-shingle rule as
-    :func:`jaccard_all_pairs` (absolute count or corpus fraction), so
-    both exact-Jaccard paths share one definition and "LSH approximates
-    the all-pairs ground truth" holds on corpora with hot shingles.
-    Document frequency is corpus-wide by definition, so enabling the cap
-    here costs one full-corpus shingle aggregation; pass a precomputed
-    ``hot`` frame (from :func:`hot_shingles`, built once per corpus) to
-    amortize it the way a production pipeline would."""
+    ``hot`` (from :func:`hot_shingles`, built once per corpus) drops the
+    SAME stop shingles as :func:`jaccard_all_pairs`' ``max_shingle_df``
+    cap, so both exact-Jaccard paths share one definition and "LSH
+    approximates the all-pairs ground truth" holds on corpora with hot
+    shingles."""
     # eager localCheckpoint: the candidate frame is read three times
     # (two id projections + the final left join), and its producer is
     # typically the whole banding pipeline — truncating the plan to a
@@ -512,9 +507,9 @@ def ngram_jaccard_pairs(
         .distinct()
     )
     if capped_sets is not None:
-        if hot is not None or max_shingle_df is not None:
+        if hot is not None:
             raise ValueError(
-                "hot/max_shingle_df must be None with capped_sets — the "
+                "hot must be None with capped_sets — the "
                 "cap is a property of the precomputed frame; passing a "
                 "different one here would be silently ignored and the "
                 "jaccard values would no longer match the frame's cap"
@@ -544,8 +539,6 @@ def ngram_jaccard_pairs(
             .select("id", F.xxhash64("shingle").alias("shingle"))
             .distinct()
         )
-        if hot is None and max_shingle_df is not None:
-            hot = hot_shingles(df, max_shingle_df, text_col, id_col, shingle_n)
         if hot is not None:
             dist = dist.join(F.broadcast(hot), "shingle", "left_anti")
         exploded = _persist_eager(

@@ -10,8 +10,7 @@ quantile is answerable with error <= one bin width BY CONSTRUCTION
 that bin's upper edge). Unlike t-digest/KLL the state shape is static
 and engine-portable — bin assignment is one floor-divide, so the whole
 pipeline (build, merge, quantile extraction) replays as static SQL and
-merge is plain addition (the CMS merge law; the streaming fold reuses
-the per-cell epoch-stamp replay guard).
+merge is plain addition (the CMS merge law).
 
 At scale: the build is a partial+final hash aggregate whose shuffle
 carries at most ``groups x n_bins`` rows regardless of input volume;

@@ -153,9 +153,9 @@ def curate_stream(
     NOT live here: keying the upsert sink on the content fingerprint
     (``fp``) makes re-observed content idempotent with an UNBOUNDED
     horizon and zero engine state — the reference's W10 sink-as-state
-    pattern (db.py:884-893) applied to training data. Compare
-    ``streaming/pipeline.streaming_dedup``, whose watermark bounds its
-    dedup horizon.
+    pattern (db.py:884-893) applied to training data. Spark's
+    ``dropDuplicatesWithinWatermark`` would instead bound the dedup
+    horizon by its watermark.
     """
     feats = stream_docs.select(
         F.col(id_col),

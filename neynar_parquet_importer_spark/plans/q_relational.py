@@ -1400,8 +1400,7 @@ def hex_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 tumbling windows (main.py:286-291's ts//dur*dur alignment) as a
-    grouped agg on the events stream table; the same expression drives the
-    Structured Streaming variant in streaming/pipeline.py."""
+    grouped agg on the events stream table."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.withColumn("window_start", window_start("ts", 3600))
@@ -1452,8 +1451,7 @@ def sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) as a batch plan:
     cumulative sum over gap-breaks assigns session indexes, then one
-    aggregate per session. The streaming twin (same semantics, per-key
-    state + timeout) is streaming.sessionize.sessionize_stream."""
+    aggregate per session."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # NTZ-safe epoch (see moving_avg_user_value)

@@ -1,5 +1,5 @@
 from .filenames import ParquetFileMeta, parse_parquet_filename, window_file_name
-from .windows import WindowPlan, plan_windows, discover_latest_full, attach_file_metadata
+from .windows import WindowPlan, plan_windows, discover_latest_full
 
 __all__ = [
     "ParquetFileMeta",
@@ -8,5 +8,4 @@ __all__ = [
     "WindowPlan",
     "plan_windows",
     "discover_latest_full",
-    "attach_file_metadata",
 ]

@@ -6,9 +6,10 @@ a "full" snapshot has start_ts=0; an incremental covers
 Zero-byte ``.empty`` files are published for windows with no rows
 (README.md:11; s3.py:229-232).
 
-In Spark terms these are partition coordinates: ``attach_file_metadata``
-(windows.py) exposes them as columns derived from
-``input_file_name()`` so time-range queries prune files.
+The importer reads window coordinates from the names alone:
+``windows.plan_windows`` builds the expected names with
+``window_file_name``, and each ledger row is parsed back from the file
+name with ``parse_parquet_filename``.
 """
 
 from __future__ import annotations

@@ -19,9 +19,6 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from .filenames import parse_parquet_filename, window_file_name
 
 
@@ -177,17 +174,4 @@ def plan_windows(
         empty_windows=empty,
         missing_windows=missing,
         next_start=t,
-    )
-
-
-def attach_file_metadata(df: DataFrame) -> DataFrame:
-    """Expose the filename window coordinates as columns
-    (S8 as `regexp_extract(input_file_name())`), so window-range predicates
-    become partition-ish pruning and provenance survives into sinks."""
-    fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    pat = r"(.+)-(.+)-(\d+)-(\d+)\.(parquet|empty)$"
-    return (
-        df.withColumn("_source_file", fname)
-        .withColumn("_window_start", F.regexp_extract(fname, pat, 3).cast("long"))
-        .withColumn("_window_end", F.regexp_extract(fname, pat, 4).cast("long"))
     )

@@ -1,4 +1,3 @@
-from .near_dup import near_dup_fold_batch
-from .pipeline import ImportPipeline, streaming_window_counts
+from .pipeline import ImportPipeline
 
-__all__ = ["ImportPipeline", "near_dup_fold_batch", "streaming_window_counts"]
+__all__ = ["ImportPipeline"]

@@ -18,10 +18,6 @@ replaces the reference's file-at-a-time thread pools; at 100 TB the
 backfill is a single parquet scan job whose parallelism is file-splits,
 not Python threads. ``daemon.direct_import`` runs the same body on one
 file.
-
-The Structured Streaming helpers at the bottom (``streaming_dedup``,
-``streaming_enrich``, ``streaming_window_counts``) are analytics over
-continuously-arriving files; they write neither the lake nor the ledger.
 """
 
 from __future__ import annotations
@@ -336,50 +332,3 @@ class ImportPipeline:
                 shutdown.wait(nap)
             else:
                 sleep_fn(nap)
-
-
-def streaming_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    id_cols: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """In-stream dedup (D1/D2's streaming form): drop rows whose key was
-    already seen within the watermark horizon. State is bounded — the
-    watermark expires old keys — so this scales to unbounded streams;
-    duplicates that recur BEYOND the horizon are the sink upsert's job
-    (the recency-guarded MERGE stays idempotent across any horizon)."""
-    id_cols = id_cols or ["event_id"]
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        id_cols
-    )
-
-
-def streaming_enrich(stream_df: DataFrame, dim_df: DataFrame, on: list[str]) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch joins against the
-    (broadcast) static dimension — no stream-side state, the standard
-    pattern for decorating an event stream with slowly-changing reference
-    data (re-read per batch if the dim is a table that updates)."""
-    return stream_df.join(F.broadcast(dim_df), on=on, how="left")
-
-
-def streaming_window_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    ts_col: str = "timestamp",
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Structured Streaming tumbling-window aggregate over a directory of
-    arriving parquet files — the W1 windows + W3 late-data story on
-    Spark's own primitives (watermark instead of max_wait polling)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration))
-        .count()
-    )

@@ -176,42 +176,6 @@ def test_moment_stats_are_partial_then_final(spark):
     assert "partial_corr" in plan
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Tables pre-bucketed on the join key must join with NO Exchange on
-    either side — the pay-the-shuffle-once-at-write-time contract."""
-    from neynar_parquet_importer_spark.catalog import load_table
-    from neynar_parquet_importer_spark.sinks.bucketed import (
-        read_table,
-        write_bucketed_table,
-    )
-
-    orders = load_table(spark, SF, "orders")
-    cust = load_table(spark, SF, "customer")
-    write_bucketed_table(
-        orders, "b_orders", ["o_custkey"], num_buckets=4,
-        path=str(tmp_path / "b_orders"),
-    )
-    write_bucketed_table(
-        cust, "b_customer", ["c_custkey"], num_buckets=4,
-        path=str(tmp_path / "b_customer"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = read_table(spark, "b_orders").join(
-            read_table(spark, "b_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join still shuffles!"
-        assert joined.count() == orders.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
 def test_tpch_round3_dims_broadcast(spark):
     """q7/q8/q9's nation/supplier/part dims must broadcast — at 100 TB the
     fact table shuffles once for the orders join and never for a dim."""

@@ -73,15 +73,14 @@ def test_upsert_idempotent_reimport(spark, sink):
 
 def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path):
     """Incremental MERGE: a second upsert only rewrites bucket directories
-    containing incoming PKs; all other buckets' files are byte-identical."""
+    containing incoming PKs; all other buckets' files are byte-identical.
+    Run with a long and a string PK: the touched buckets are found by
+    hashing the key, so both key types must route to the same bucket on
+    write and on merge."""
     import hashlib
     import os
 
-    sink = LakeUpsertSink(spark, str(tmp_path / "tbl"), ("id",), "updated_at", n_buckets=8)
-    sink.upsert(_df(spark, [(i, f"v{i}", _ts(1)) for i in range(1, 41)]), epoch=1)
-    data = sink._data_dir
-
-    def snapshot():
+    def snapshot(data):
         out = {}
         for root, _, files in os.walk(data):
             for f in files:
@@ -90,24 +89,36 @@ def test_upsert_untouched_buckets_not_rewritten(spark, tmp_path):
                     out[os.path.relpath(p, data)] = hashlib.md5(fh.read()).hexdigest()
         return out
 
-    before = snapshot()
-    sink.upsert(_df(spark, [(1, "v1b", _ts(2))]), epoch=2)
-    after = snapshot()
+    for key_type, key in (("long", int), ("string", str)):
+        schema = f"id {key_type}, v string, updated_at timestamp"
+        sink = LakeUpsertSink(
+            spark, str(tmp_path / key_type), ("id",), "updated_at", n_buckets=8
+        )
+        sink.upsert(
+            spark.createDataFrame(
+                [(key(i), f"v{i}", _ts(1)) for i in range(1, 41)], schema
+            ),
+            epoch=1,
+        )
+        data = sink._data_dir
 
-    # state is correct
-    st = _state(sink)
-    assert st[1] == ("v1b", _ts(2)) and len(st) == 40
-    # only the bucket holding id=1 changed
-    from pyspark.sql import functions as F2
-    bucket = spark.createDataFrame([(1,)], "id long").select(
-        F2.pmod(F2.xxhash64("id"), F2.lit(8)).cast("int").alias("b")
-    ).head()[0]
-    changed_dirs = {
-        os.path.dirname(k) for k in (set(before) ^ set(after))
-    } | {os.path.dirname(k) for k in before if k in after and before[k] != after[k]}
-    assert changed_dirs <= {f"__bucket={bucket}"}
-    untouched = {k for k in before if not k.startswith(f"__bucket={bucket}")}
-    assert untouched and all(before[k] == after[k] for k in untouched)
+        before = snapshot(data)
+        sink.upsert(spark.createDataFrame([(key(1), "v1b", _ts(2))], schema), epoch=2)
+        after = snapshot(data)
+
+        # state is correct
+        st = _state(sink)
+        assert st[key(1)] == ("v1b", _ts(2)) and len(st) == 40, key_type
+        # only the bucket holding id=1 changed
+        bucket = spark.createDataFrame([(key(1),)], f"id {key_type}").select(
+            F.pmod(F.xxhash64("id"), F.lit(8)).cast("int").alias("b")
+        ).head()[0]
+        changed_dirs = {
+            os.path.dirname(k) for k in (set(before) ^ set(after))
+        } | {os.path.dirname(k) for k in before if k in after and before[k] != after[k]}
+        assert changed_dirs <= {f"__bucket={bucket}"}, key_type
+        untouched = {k for k in before if not k.startswith(f"__bucket={bucket}")}
+        assert untouched and all(before[k] == after[k] for k in untouched), key_type
 
 
 def test_upsert_writes_one_file_per_bucket(spark, tmp_path):
@@ -404,7 +415,7 @@ def test_empty_first_upsert_does_not_brick_sink(spark, sink):
     """A zero-row first upsert must leave the sink readable-as-None and
     writable: the marker-only data dir (just _SUCCESS) used to satisfy
     exists() and then crash every read with UNABLE_TO_INFER_SCHEMA —
-    permanently poisoning all streaming sketch folds whose first batch
+    permanently poisoning any sink-as-state fold whose first batch
     happened to produce an empty delta."""
     empty = _df(spark, []).filter(F.lit(False))
     sink.upsert(empty, epoch=1)
