@@ -6,9 +6,11 @@ WHERE excluded.updated_at >= existing.updated_at`` — last-writer-wins
 keyed on PK with a recency guard, which together with idempotent
 re-imports gives exactly-once-ish end state.
 
-Lake expression of the same semantics:
+Lake expression of the same semantics, one pass per commit that also
+dedups the batch (SURVEY §7.3 hard part 1):
   new_state = last_writer_wins(existing ∪ incoming, pk, version DESC)
-with ties broken toward the incoming batch (the `>=` in the guard).
+with ties broken toward the incoming batch (the `>=` in the guard); under
+that order it equals deduping the batch first, ties included.
 
 Storage layout & scale:
 - rows live under ``<root>/data/__bucket=<i>/`` where
@@ -25,9 +27,7 @@ Storage layout & scale:
 - the merge is one shuffle on ``__bucket`` over the touched buckets, so
   a bucket's rows sit in one task and every commit writes one file per
   touched bucket. Touched buckets bound the merge's parallelism: size
-  ``n_buckets`` to at least the core count. Incoming batches are deduped
-  per PK *before* merging (SURVEY §7.3 hard part 1), also over a bucket
-  shuffle.
+  ``n_buckets`` to at least the core count.
 
 Crash safety (single writer per table, like the reference's
 one-importer-per-table topology): each touched bucket is swapped by
@@ -46,10 +46,11 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import last_writer_wins
+from .ledger import local_path
 
 _BUCKET = "__bucket"
 
@@ -64,7 +65,7 @@ class LakeUpsertSink:
         n_buckets: int = 16,
     ) -> None:
         self.spark = spark
-        self.root = root
+        self.root = local_path(root)
         self.primary_key = primary_key
         self.version_column = version_column
         self.n_buckets = n_buckets
@@ -126,22 +127,25 @@ class LakeUpsertSink:
         )
 
     def upsert(self, incoming: DataFrame, epoch: int = 0) -> None:
+        """Merge ``incoming`` into the buckets it touches: one
+        ``last_writer_wins`` pass over their stored rows and the batch.
+        Three Spark jobs, two into a fresh sink: a shuffle-free pass that
+        caches the batch and observes its buckets (at most ``n_buckets``
+        ints reach the driver), the merge shuffle, the write."""
         self._recover()
         self._check_meta()
-        # persist: the batch is evaluated TWICE (the touched-bucket
-        # collect, then the merged staging write). Unpinned, the second
-        # evaluation re-runs the whole upstream plan — and if that plan
-        # embeds any non-determinism (a re-read of a changing source),
-        # it can emit a bucket that was not in `touched`, whose existing
-        # directory was never merged: the per-bucket swap would then
-        # replace it with only new rows, silently deleting stored PKs.
-        batch = self._newest_per_pk(
-            incoming.withColumn("__src_priority", F.lit(1)).withColumn(
-                _BUCKET, self._bucket_expr()
-            )
-        ).persist()
+        batch = incoming.withColumn("__src_priority", F.lit(1)).withColumn(
+            _BUCKET, self._bucket_expr()
+        )
+        if not self.exists():
+            return self._swap_in(self._newest_per_pk(batch), epoch)
+        # persist: the touched-bucket pass and the write must see the same
+        # rows. Unpinned, a non-deterministic upstream plan (a re-read of a
+        # changing source) could emit a bucket that was not touched, whose
+        # stored rows were never merged: its swap would silently drop them.
+        batch = batch.persist()
         try:
-            self._upsert_inner(batch, epoch)
+            self._swap_in(self._newest_per_pk(self._with_stored(batch)), epoch)
         finally:
             batch.unpersist()
 
@@ -183,29 +187,25 @@ class LakeUpsertSink:
                 "recency-guard change requires a rewrite, not a reopen"
             )
 
-    def _upsert_inner(self, batch: DataFrame, epoch: int) -> None:
-        merged = batch
-        if self.exists():
-            # touched buckets only: one tiny driver-side distinct (at most
-            # n_buckets ints — control-plane, not data)
-            touched = sorted(
-                r[0] for r in batch.select(_BUCKET).distinct().collect()
-            )
-            live = [
-                p
-                for p in (
-                    os.path.join(self._data_dir, f"{_BUCKET}={b}") for b in touched
-                )
-                if os.path.isdir(p)
-            ]
-            if live:
-                existing = (
-                    self.spark.read.option("basePath", self._data_dir)
-                    .parquet(*live)
-                    .withColumn("__src_priority", F.lit(0))
-                )
-                merged = self._newest_per_pk(existing.unionByName(batch))
+    def _with_stored(self, batch: DataFrame) -> DataFrame:
+        """``batch`` ∪ the stored rows of the buckets it touches, read with
+        the batch's schema so that no job infers it from their footers."""
+        touched = Observation()
+        batch.observe(touched, F.collect_set(_BUCKET).alias("b")).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        paths = (os.path.join(self._data_dir, f"{_BUCKET}={b}") for b in touched.get["b"])
+        live = [p for p in paths if os.path.isdir(p)]
+        if not live:
+            return batch
+        existing = (
+            self.spark.read.schema(batch.drop("__src_priority").schema)
+            .option("basePath", self._data_dir)
+            .parquet(*live)
+        )
+        return existing.withColumn("__src_priority", F.lit(0)).unionByName(batch)
 
+    def _swap_in(self, merged: DataFrame, epoch: int) -> None:
         staging = os.path.join(self.root, f".staging-{epoch}")
         if os.path.isdir(staging):
             shutil.rmtree(staging)

@@ -24,6 +24,7 @@ import tempfile
 import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
+from urllib.parse import urlsplit
 
 
 @dataclass
@@ -41,6 +42,20 @@ class LedgerEntry:
     imported_at: float = field(default_factory=lambda: time.time())
 
 
+def local_path(path: str) -> str:
+    """``path``, which must be a local path. The ledger and the lake sink
+    write through ``os`` calls, which would put an ``s3a://`` or
+    ``file://`` root in a ``./s3a:/…`` or ``./file:/…`` tree under the
+    working directory, so a root with a URI scheme is refused."""
+    path = os.fspath(path)
+    if urlsplit(path).scheme:
+        raise ValueError(
+            f"{path!r} is a URI; the ledger and the lake sink take local "
+            "paths only (object-store roots are not supported yet)"
+        )
+    return path
+
+
 def _is_complete(line: bytes) -> bool:
     """A line as ``_append`` writes it: one JSON document and its newline."""
     try:
@@ -52,7 +67,7 @@ def _is_complete(line: bytes) -> bool:
 
 class ImportLedger:
     def __init__(self, path: str) -> None:
-        self.path = path
+        self.path = local_path(path)
         self._entries: dict[str, LedgerEntry] = {}
         self._live_lines = 0  # lines in the file since last compaction
         self._defer_sync = False

@@ -12,11 +12,12 @@ appended as one JSON line. A run that exits non-zero or prints no JSON
 (``live`` does so when its backlog check trips) is recorded as failed with
 the tail of its stderr, never re-run.
 
-The summary gives, per metric, each side's median and quartiles over its
-successful runs, the pairs the change won (ties and pairs with a failed or
-incorrect run count for neither side) and the verdict: a gain is shown
-when at least 10 pairs ran, the change won at least 9 of every 10 and the medians
-differ, in the better direction, by more than the parent's interquartile
+The summary gives each side's share of failed operations (``failed`` over
+``attempted``, summed over the runs that printed a result) and, per
+metric, each side's median and quartiles over its successful runs, the
+pairs the change won (ties and pairs with a failed or incorrect run count
+for neither side) and the verdict: a gain is shown when at least 10 pairs
+ran, the change won at least 9 of every 10 and the medians differ, in the better direction, by more than the parent's interquartile
 range. End-to-end metrics also show the change of the median against the
 bound ``BENCHMARK.json`` fixes. Nothing under ``perfbench/`` is changed.
 """
@@ -70,8 +71,8 @@ def run_once(root: str, workload: str, seed: int, seconds: int, trace: int) -> d
     if proc.returncode != 0 or not isinstance(out, dict):
         tail = [ln for ln in proc.stderr.splitlines() if ln.strip()][-3:]
         return {"ok": False, "returncode": proc.returncode, "error": " | ".join(tail)}
-    return {"ok": bool(out["correct"]), "correct": out["correct"], "failed": out["failed"],
-            "metrics": {n: m["value"] for n, m in out["metrics"].items()}}
+    return {"ok": bool(out["correct"]), "correct": out["correct"], "attempted": out["attempted"],
+            "failed": out["failed"], "metrics": {n: m["value"] for n, m in out["metrics"].items()}}
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -90,6 +91,12 @@ def summarize(runs: list[dict], bench: dict) -> None:
     names = sorted({n for r in runs if r["ok"] for n in r["metrics"]})
     bad = ", ".join(f"{r['side']} {r['seed']}" for r in runs if not r["ok"])
     print(f"\n{len(pairs)} pairs; failed or incorrect runs: {bad or 'none'}")
+    for side in SIDES:
+        done = [r for r in runs if r["side"] == side and "attempted" in r]
+        failed, attempted = sum(r["failed"] for r in done), sum(r["attempted"] for r in done)
+        share = f"{100 * failed / attempted:.2f} %" if attempted else "-"
+        print(f"{side}: failed/attempted operations {failed}/{attempted} ({share}) over {len(done)} runs "
+              f"that printed a result, {sum(r['side'] == side for r in runs) - len(done)} that did not")
     print(f"{'metric':40} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30} {'wins':>7}  verdict")
     for name in names:
         vals = {s: [r["metrics"][name] for r in runs if r["side"] == s and r["ok"]] for s in SIDES}

@@ -4,6 +4,7 @@ idempotent re-import, 65535-param chunking, in-order completion."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +62,58 @@ def test_upsert_intra_batch_dedup(spark, sink):
     # one batch containing the same PK twice must not fail and newest wins
     sink.upsert(_df(spark, [(1, "x", _ts(1)), (1, "y", _ts(2))]), epoch=1)
     assert _state(sink)[1] == ("y", _ts(2))
+    # in-batch duplicates over stored rows: the merge is the only dedup
+    # pass, and the `>=` tie still goes to the incoming row
+    sink.upsert(_df(spark, [(1, "s", _ts(3)), (2, "s", _ts(4))]), epoch=2)
+    sink.upsert(
+        _df(
+            spark,
+            [(1, "a", _ts(2)), (1, "b", _ts(3)), (2, "x", _ts(5)), (2, "y", _ts(4))],
+        ),
+        epoch=3,
+    )
+    assert _state(sink) == {1: ("b", _ts(3)), 2: ("x", _ts(5))}
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs that ``action()`` runs, counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_upsert_job_count(spark, tmp_path):
+    """A commit's Spark jobs are its fixed cost: a fresh sink runs the
+    merge shuffle and the write; a stored sink adds one shuffle-free pass
+    that caches the batch and finds its buckets."""
+    sink = LakeUpsertSink(spark, str(tmp_path / "tbl"), ("id",), "updated_at", n_buckets=8)
+    first = _df(spark, [(i, f"v{i}", _ts(1)) for i in range(1, 41)])
+    assert _jobs(spark, lambda: sink.upsert(first, epoch=1)) <= 2
+    batch = _df(spark, [(1, "a", _ts(2)), (1, "b", _ts(3)), (7, "c", _ts(2))])
+    assert _jobs(spark, lambda: sink.upsert(batch, epoch=2)) == 3
+    st = _state(sink)
+    assert len(st) == 40 and st[1] == ("b", _ts(3)) and st[7] == ("c", _ts(2))
+
+
+@pytest.mark.parametrize("root", ["s3a://bucket/lake", "file:///tmp/lake", "file:/tmp/lake"])
+def test_uri_roots_are_refused(spark, tmp_path, monkeypatch, root):
+    """The sink and the ledger write through ``os`` calls, so a URI root
+    would become a ``./s3a:/…`` or ``./file:/…`` tree under the working
+    directory: both refuse it, and nothing is created."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="URI"):
+        LakeUpsertSink(spark, root, ("id",), "updated_at")
+    with pytest.raises(ValueError, match="URI"):
+        ImportLedger(f"{root}/ledger.jsonl")
+    assert os.listdir(tmp_path) == []
 
 
 def test_upsert_idempotent_reimport(spark, sink):
