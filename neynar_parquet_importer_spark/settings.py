@@ -43,8 +43,7 @@ class Settings:
     """Import-daemon configuration. Field names follow the reference so an
     operator's env file carries over: TABLES, VIEWS, NPE_VERSION,
     NPE_DURATION, PARQUET_S3_SCHEMA, POSTGRES_SCHEMA, LOCAL_INPUT_DIR,
-    EXIT_AFTER_MAX_WAIT, SKIP_FULL_IMPORT, FILTERED_ROW_MULTIPLIER,
-    FILTER_FILE, CU_MODE."""
+    EXIT_AFTER_MAX_WAIT, FILTER_FILE."""
 
     tables: tuple[str, ...] = field(default_factory=lambda: _env_csv("TABLES"))
     views: tuple[str, ...] = field(default_factory=lambda: _env_csv("VIEWS"))
@@ -68,14 +67,9 @@ class Settings:
     exit_after_max_wait: bool = field(
         default_factory=lambda: _env_bool("EXIT_AFTER_MAX_WAIT", False)
     )
-    skip_full_import: bool = field(
-        default_factory=lambda: _env_bool("SKIP_FULL_IMPORT", False)
-    )
-    filtered_row_multiplier: float = 1.1  # C7 cost multiplier (settings.py:59)
     filter_file: str | None = field(
         default_factory=lambda: os.environ.get("FILTER_FILE")
     )
-    cu_mode: str = field(default_factory=lambda: _env_str("CU_MODE", "off"))
 
     def initialize(self) -> "Settings":
         """The reference's defaulting rules (settings.py:96-110): schema

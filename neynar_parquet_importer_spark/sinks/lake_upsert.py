@@ -55,6 +55,15 @@ from .ledger import local_path
 _BUCKET = "__bucket"
 
 
+def _stored_columns(bucket_dir: str) -> list[str]:
+    """Column names of a bucket's data, from one file's Parquet footer
+    (read on the driver: no Spark job)."""
+    import pyarrow.parquet as pq
+
+    name = min(n for n in os.listdir(bucket_dir) if n.endswith(".parquet") and n[0] not in "._")
+    return pq.read_schema(os.path.join(bucket_dir, name)).names
+
+
 class LakeUpsertSink:
     def __init__(
         self,
@@ -189,7 +198,9 @@ class LakeUpsertSink:
 
     def _with_stored(self, batch: DataFrame) -> DataFrame:
         """``batch`` ∪ the stored rows of the buckets it touches, read with
-        the batch's schema so that no job infers it from their footers."""
+        the batch's schema so that no job infers it from their footers.
+        Raises ``ValueError`` if the batch lacks a stored column, which
+        that read would silently drop from every touched bucket."""
         touched = Observation()
         batch.observe(touched, F.collect_set(_BUCKET).alias("b")).write.format(
             "noop"
@@ -198,6 +209,12 @@ class LakeUpsertSink:
         live = [p for p in paths if os.path.isdir(p)]
         if not live:
             return batch
+        missing = [c for c in _stored_columns(live[0]) if c not in batch.columns]
+        if missing:
+            raise ValueError(
+                f"batch lacks stored column(s) {missing} of the sink at "
+                f"{self.root!r}; an upsert must carry every stored column"
+            )
         existing = (
             self.spark.read.schema(batch.drop("__src_priority").schema)
             .option("basePath", self._data_dir)

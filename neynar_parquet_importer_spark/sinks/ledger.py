@@ -9,20 +9,26 @@ idempotency (SURVEY W6), so the ledger records files and completion.
 Storage here is a JSON-lines file — the ledger is control-plane metadata
 (KBs), not data; a production deployment can point the same interface at
 a JDBC table. Writes are O(1) appends (last line per file_name wins on
-replay), auto-compacted when dead lines dominate — a long import history
-never pays O(n) per recorded window. In-order completion (W7) is
-preserved: ``advance_completed_through`` only marks a file completed if
-every earlier window for the table is completed, mirroring the ordered
-futures queue (main.py:303-338, db.py:543-549).
+replay); a file name gets one record line and at most one completion
+line. In-order completion (W7) is preserved: ``advance_completed_through``
+only marks a file completed if every earlier window for the table is
+completed, mirroring the ordered futures queue (main.py:303-338,
+db.py:543-549).
+
+The completion write is the one durability point: it appends the
+completion lines of one call in one write and fsyncs once, which also
+makes every earlier record line durable (per-line fsyncs at 17-18 tables
+of 1-second windows per host contend on the shared filesystem journal
+across every importer process). ``record_file`` does not fsync;
+a record line lost in a crash is re-planned and re-recorded by the next
+catch-up, and the recency-guarded upsert makes the re-import idempotent.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
-from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 from urllib.parse import urlsplit
 
@@ -69,9 +75,6 @@ class ImportLedger:
     def __init__(self, path: str) -> None:
         self.path = local_path(path)
         self._entries: dict[str, LedgerEntry] = {}
-        self._live_lines = 0  # lines in the file since last compaction
-        self._defer_sync = False
-        self._sync_pending = False
         self._load()
 
     def _load(self) -> None:
@@ -80,70 +83,31 @@ class ImportLedger:
         with open(self.path, "rb") as f:
             lines = f.readlines()
         if lines and not _is_complete(lines[-1]):
-            # a crash mid-append (flushed, not yet fsynced under
-            # deferred_sync) can tear the last line and only that one:
-            # drop it, and cut the file back to the last complete line so
-            # the next append does not glue onto the fragment
+            # a crash mid-append (record lines are not fsynced) can tear
+            # the last line and only that one: drop it, and cut the file
+            # back to the last complete line so the next append does not
+            # glue onto the fragment
             lines.pop()
             with open(self.path, "r+b") as f:
                 f.truncate(sum(map(len, lines)))
                 os.fsync(f.fileno())
         for line in lines:
             if line.strip():
-                self._live_lines += 1
                 e = LedgerEntry(**json.loads(line))
                 self._entries[e.file_name] = e  # last line wins
-        # a restart is the natural compaction point: collapse history when
-        # dead (superseded) lines dominate
-        if self._live_lines > 2 * max(len(self._entries), 16):
-            self._compact()
 
-    def _compact(self) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            for e in self._entries.values():
-                f.write(json.dumps(asdict(e)) + "\n")
-        os.replace(tmp, self.path)  # atomic swap, crash-safe
-        self._live_lines = len(self._entries)
-
-    def _append(self, entry: LedgerEntry) -> None:
-        """O(1) write path: one appended line; replay keeps the last line
-        per file_name, so an update is just a newer line."""
+    def _append(self, entries: list[LedgerEntry], sync: bool) -> None:
+        """O(1) write path: one write of one line per entry; replay keeps
+        the last line per file_name, so an update is just a newer line.
+        ``sync`` fsyncs the file after the write."""
+        if not entries:
+            return
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         with open(self.path, "a") as f:
-            f.write(json.dumps(asdict(entry)) + "\n")
+            f.write("".join(json.dumps(asdict(e)) + "\n" for e in entries))
             f.flush()
-            if self._defer_sync:
-                self._sync_pending = True
-            else:
+            if sync:
                 os.fsync(f.fileno())
-        self._live_lines += 1
-
-    @contextmanager
-    def deferred_sync(self):
-        """Batch the fsyncs of every append inside the block into ONE
-        fsync at exit. A catch-up writes 2+ ledger lines per window
-        (record + in-order completion); at the reference's topology —
-        17-18 tables of 1-second windows per host (main.py:46-89) —
-        per-append fsync is ~36+ journal commits/second, and on a
-        shared ext4 journal every process's fsync serializes behind
-        the running jbd2 transaction (measured on the 18-table sharded
-        soak as synchronized multi-second latency spikes across all
-        importer processes). One fsync per catch-up keeps the
-        durability contract: a crash can only lose lines the current
-        catch-up wrote, which replay re-plans and the recency-guarded
-        upsert re-imports idempotently — exactly the guarantee a crash
-        between append and fsync already had."""
-        self._defer_sync = True
-        try:
-            yield
-        finally:
-            self._defer_sync = False
-            if self._sync_pending:
-                self._sync_pending = False
-                with open(self.path, "a") as f:
-                    os.fsync(f.fileno())
 
     # -- upsert / progress (db.py:365-392, 527-566, 621-642 semantics) -----
     def record_file(self, entry: LedgerEntry) -> LedgerEntry:
@@ -153,14 +117,17 @@ class ImportLedger:
         if existing is not None:
             return existing
         self._entries[entry.file_name] = entry
-        self._append(entry)
+        self._append([entry], sync=False)
         return entry
 
-    def mark_completed(self, file_name: str) -> None:
+    def _complete(self, file_name: str) -> LedgerEntry:
         e = self._entries[file_name]
         e.completed = True
         e.last_row_group_imported = max(e.total_row_groups - 1, 0)
-        self._append(e)
+        return e
+
+    def mark_completed(self, file_name: str) -> None:
+        self._append([self._complete(file_name)], sync=True)
 
     def is_completed(self, file_name: str) -> bool:
         e = self._entries.get(file_name)
@@ -173,14 +140,6 @@ class ImportLedger:
     # and a dict resize mid-iteration raises RuntimeError (measured:
     # a soak monitor died silently on it). list(dict.values()) is
     # GIL-atomic, so no lock is needed for these read-only probes.
-    def newest_completed_incremental(self) -> LedgerEntry | None:
-        done = [
-            e
-            for e in list(self._entries.values())
-            if e.completed and e.file_type == "incremental"
-        ]
-        return max(done, key=lambda e: e.end_timestamp, default=None)
-
     def newest_full(self) -> LedgerEntry | None:
         fulls = [e for e in list(self._entries.values()) if e.file_type == "full"]
         return max(fulls, key=lambda e: e.end_timestamp, default=None)
@@ -235,16 +194,16 @@ class ImportLedger:
 
     def advance_completed_through(self, ordered_file_names: list[str], done: set[str]) -> list[str]:
         """W7 in-order commit: walk the window sequence, completing files
-        only while the contiguous prefix is done; return newly completed."""
-        completed: list[str] = []
+        only while the contiguous prefix is done; return newly completed.
+        Their completion lines go out in one write and one fsync."""
+        completed: list[LedgerEntry] = []
         for name in ordered_file_names:
-            # a name claimed done but never recorded cannot be completed
-            # (mark_completed would KeyError mid-walk after appending
-            # earlier entries); in-order discipline says stop at it —
-            # the caller records it and re-advances
+            # a name claimed done but never recorded cannot be completed;
+            # in-order discipline says stop at it — the caller records it
+            # and re-advances
             if name not in done or name not in self._entries:
                 break
             if not self.is_completed(name):
-                self.mark_completed(name)
-                completed.append(name)
-        return completed
+                completed.append(self._complete(name))
+        self._append(completed, sync=True)
+        return [e.file_name for e in completed]

@@ -165,33 +165,30 @@ class ImportPipeline:
         rows = self.import_files(pending, now) if pending else 0
 
         # ledger: record data files + empty sentinels, then commit in
-        # order — one fsync for the whole batch (deferred_sync): at 17-18
-        # tables of 1-second windows per host, per-append fsyncs contend
-        # on the shared filesystem journal across every importer process
-        with self.ledger.deferred_sync():
-            names = [p.rsplit("/", 1)[-1] for p in pending] + [
-                window_file_name(self.schema_name, self.spec.name, t, self.duration, empty=True)
-                for t in plan.empty_windows
-            ]
-            entries = [self.ledger_entry(n, backfill) for n in names]
-            for entry in entries:
-                self.ledger.record_file(entry)
+        # order; the commit is the ledger's one fsync
+        names = [p.rsplit("/", 1)[-1] for p in pending] + [
+            window_file_name(self.schema_name, self.spec.name, t, self.duration, empty=True)
+            for t in plan.empty_windows
+        ]
+        entries = [self.ledger_entry(n, backfill) for n in names]
+        for entry in entries:
+            self.ledger.record_file(entry)
 
-            # in-order commit (W7): everything in this batch succeeded
-            # together, but completion must never jump an expected-yet-
-            # unpublished window — the reference's ordered-futures queue
-            # (main.py:303-338) waits on every window and never skips.
-            # Windows beyond the first gap ARE upserted (idempotent;
-            # they'll be re-read next run) but stay uncommitted so
-            # resume_point() cannot advance past the gap: a late-published
-            # window is re-planned and imported, not lost.
-            min_missing = min(plan.missing_windows, default=None)
-            commit_names = [
-                e.file_name
-                for e in sorted(entries, key=lambda e: e.end_timestamp)
-                if min_missing is None or e.end_timestamp <= min_missing
-            ]
-            self.ledger.advance_completed_through(commit_names, set(commit_names))
+        # in-order commit (W7): everything in this batch succeeded
+        # together, but completion must never jump an expected-yet-
+        # unpublished window — the reference's ordered-futures queue
+        # (main.py:303-338) waits on every window and never skips.
+        # Windows beyond the first gap ARE upserted (idempotent;
+        # they'll be re-read next run) but stay uncommitted so
+        # resume_point() cannot advance past the gap: a late-published
+        # window is re-planned and imported, not lost.
+        min_missing = min(plan.missing_windows, default=None)
+        commit_names = [
+            e.file_name
+            for e in sorted(entries, key=lambda e: e.end_timestamp)
+            if min_missing is None or e.end_timestamp <= min_missing
+        ]
+        self.ledger.advance_completed_through(commit_names, set(commit_names))
 
         return ImportReport(
             files_imported=len(pending),

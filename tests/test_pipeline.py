@@ -4,7 +4,9 @@ reference's test_parquet_direct.py scenarios on the lake sink."""
 
 from __future__ import annotations
 
+import collections
 import datetime
+import json
 import os
 
 import pytest
@@ -140,6 +142,15 @@ def test_catchup_never_commits_past_missing_window(pipeline_env, spark):
     assert pipe.ledger.is_completed("nindexer-follows-1002-1003.parquet")
     assert pipe.ledger.is_completed("nindexer-follows-1003-1004.parquet")
     assert pipe.ledger.resume_point() == 1004
+
+    # a forced re-import of everything adds no ledger line: across the
+    # gap, its filling and the backfill, a file name has one record line
+    # and at most one completion line, so the ledger needs no compaction
+    pipe.run_catchup(end_timestamp=1004, now=1004, force=True)
+    assert pipe.ledger.resume_point() == 1004
+    with open(pipe.ledger.path) as f:
+        per_name = collections.Counter(json.loads(line)["file_name"] for line in f)
+    assert len(per_name) == 5 and max(per_name.values()) <= 2
 
 
 def test_plan_windows_starts_at_snapshot_end(spark, tmp_path):

@@ -103,6 +103,38 @@ def test_upsert_job_count(spark, tmp_path):
     assert len(st) == 40 and st[1] == ("b", _ts(3)) and st[7] == ("c", _ts(2))
 
 
+def test_upsert_missing_stored_column_raises(spark, tmp_path):
+    """Reading the touched buckets with the batch's schema would drop a
+    stored column the batch lacks from every row in them, so such a
+    batch is refused before anything is written. Extra batch columns
+    are allowed."""
+    import hashlib
+
+    sink = LakeUpsertSink(spark, str(tmp_path / "tbl"), ("id",), "updated_at", n_buckets=4)
+    sink.upsert(_df(spark, [(i, f"v{i}", _ts(1)) for i in range(1, 9)]), epoch=1)
+
+    def snapshot():
+        out = {}
+        for root, _, files in os.walk(sink.root):
+            for f in files:
+                with open(os.path.join(root, f), "rb") as fh:
+                    out[os.path.join(root, f)] = hashlib.md5(fh.read()).hexdigest()
+        return out
+
+    before = snapshot()
+    narrow = spark.createDataFrame([(1, _ts(2))], "id long, updated_at timestamp")
+    with pytest.raises(ValueError, match=r"\['v'\]"):
+        sink.upsert(narrow, epoch=2)
+    assert snapshot() == before
+
+    wide = spark.createDataFrame(
+        [(1, "a", _ts(2), 5)], "id long, v string, updated_at timestamp, w int"
+    )
+    sink.upsert(wide, epoch=3)
+    st = _state(sink)
+    assert len(st) == 8 and st[1] == ("a", _ts(2))
+
+
 @pytest.mark.parametrize("root", ["s3a://bucket/lake", "file:///tmp/lake", "file:/tmp/lake"])
 def test_uri_roots_are_refused(spark, tmp_path, monkeypatch, root):
     """The sink and the ledger write through ``os`` calls, so a URI root
@@ -561,58 +593,45 @@ def test_reopen_meta_without_version_column_raises(spark, tmp_path):
         reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
 
 
-def test_ledger_deferred_sync_batches_fsyncs(tmp_path, monkeypatch):
-    """deferred_sync: appends inside the block skip their per-line
-    fsync and exactly ONE fsync lands at exit; durability contract
-    unchanged (every line is in the file and reloads)."""
-    import os as _os
-
+def test_ledger_fsyncs_once_per_commit(tmp_path, monkeypatch):
+    """The in-order commit is the ledger's one durability point: record
+    lines are not fsynced, and one advance writes its completion lines
+    in one write with one fsync, however many windows it completes (the
+    fsync also makes the record lines before them durable). An advance
+    with nothing to commit writes nothing."""
     import neynar_parquet_importer_spark.sinks.ledger as ledger_mod
 
     calls = []
-    real_fsync = _os.fsync
+    real_fsync = os.fsync
     monkeypatch.setattr(
         ledger_mod.os, "fsync", lambda fd: (calls.append(1), real_fsync(fd))
     )
+
+    fresh = ImportLedger(str(tmp_path / "fresh.jsonl"))
+    assert fresh.advance_completed_through([], set()) == []
+    assert fresh.advance_completed_through(["s-t-0-1.parquet"], {"s-t-0-1.parquet"}) == []
+    assert calls == [] and not os.path.exists(fresh.path)
+
     path = str(tmp_path / "ledger.jsonl")
     led = ImportLedger(path)
-
-    def entry(name, start, end):
-        return LedgerEntry(
-            file_name=name, file_type="incremental", file_version="v3",
-            file_duration_s=end - start, start_timestamp=start,
-            end_timestamp=end,
+    names = [f"s-t-{i}-{i + 1}.parquet" for i in range(5)]
+    for i, name in enumerate(names):
+        led.record_file(
+            LedgerEntry(
+                file_name=name, file_type="incremental", file_version="v3",
+                file_duration_s=1, start_timestamp=i, end_timestamp=i + 1,
+            )
         )
+    assert calls == []  # record lines are not fsynced
 
-    with led.deferred_sync():
-        for i in range(5):
-            led.record_file(entry(f"s-t-{i}-{i+1}.parquet", i, i + 1))
-        led.mark_completed("s-t-0-1.parquet")
-        assert calls == []  # no per-append fsync inside the block
-    assert len(calls) == 1  # one batched fsync at exit
-
-    # outside the block the per-append fsync is back
-    led.record_file(entry("s-t-9-10.parquet", 9, 10))
+    assert led.advance_completed_through(names, set(names[:3])) == names[:3]
+    assert len(calls) == 1  # three completions, one fsync
+    led.mark_completed(names[4])  # a direct completion syncs its own line
     assert len(calls) == 2
+    with open(path) as f:
+        assert len(f.readlines()) == 5 + 3 + 1
 
-    led2 = ImportLedger(path)  # everything durable + replayable
-    assert led2.is_completed("s-t-0-1.parquet")
-    assert led2.resume_point() == 1
-    assert not led2.is_completed("s-t-4-5.parquet")
-
-
-def test_ledger_deferred_sync_no_writes_no_fsync(tmp_path, monkeypatch):
-    """An empty deferred block must not fsync (and must not create the
-    file): catch-ups with nothing pending stay zero-IO."""
-    import neynar_parquet_importer_spark.sinks.ledger as ledger_mod
-
-    calls = []
-    monkeypatch.setattr(ledger_mod.os, "fsync", lambda fd: calls.append(1))
-    path = str(tmp_path / "ledger.jsonl")
-    led = ImportLedger(path)
-    with led.deferred_sync():
-        pass
-    assert calls == []
-    import os as _os
-
-    assert not _os.path.exists(path)
+    led2 = ImportLedger(path)  # everything reloads
+    assert [led2.is_completed(n) for n in names] == [True, True, True, False, True]
+    assert led2.resume_point() == 3  # the completion beyond the gap waits
+    assert led2.earliest_start() == 0
