@@ -593,12 +593,7 @@ def test_reopen_meta_without_version_column_raises(spark, tmp_path):
         reopened.upsert(_df(spark, [(1, "b", _ts(2))]), epoch=2)
 
 
-def test_ledger_fsyncs_once_per_commit(tmp_path, monkeypatch):
-    """The in-order commit is the ledger's one durability point: record
-    lines are not fsynced, and one advance writes its completion lines
-    in one write with one fsync, however many windows it completes (the
-    fsync also makes the record lines before them durable). An advance
-    with nothing to commit writes nothing."""
+def _count_fsyncs(monkeypatch):
     import neynar_parquet_importer_spark.sinks.ledger as ledger_mod
 
     calls = []
@@ -606,12 +601,15 @@ def test_ledger_fsyncs_once_per_commit(tmp_path, monkeypatch):
     monkeypatch.setattr(
         ledger_mod.os, "fsync", lambda fd: (calls.append(1), real_fsync(fd))
     )
+    return calls
 
-    fresh = ImportLedger(str(tmp_path / "fresh.jsonl"))
-    assert fresh.advance_completed_through([], set()) == []
-    assert fresh.advance_completed_through(["s-t-0-1.parquet"], {"s-t-0-1.parquet"}) == []
-    assert calls == [] and not os.path.exists(fresh.path)
 
+def test_ledger_deferred_sync_batches_fsyncs(tmp_path, monkeypatch):
+    """The in-order commit is the ledger's one durability point: record
+    lines are not fsynced, and one advance writes its completion lines
+    in one write with one fsync, however many windows it completes (the
+    fsync also makes the record lines before them durable)."""
+    calls = _count_fsyncs(monkeypatch)
     path = str(tmp_path / "ledger.jsonl")
     led = ImportLedger(path)
     names = [f"s-t-{i}-{i + 1}.parquet" for i in range(5)]
@@ -635,3 +633,14 @@ def test_ledger_fsyncs_once_per_commit(tmp_path, monkeypatch):
     assert [led2.is_completed(n) for n in names] == [True, True, True, False, True]
     assert led2.resume_point() == 3  # the completion beyond the gap waits
     assert led2.earliest_start() == 0
+
+
+def test_ledger_deferred_sync_no_writes_no_fsync(tmp_path, monkeypatch):
+    """An advance with nothing to commit (no windows, or a first window
+    claimed done but never recorded) neither fsyncs nor creates the file: catch-ups
+    with nothing pending stay zero-IO."""
+    calls = _count_fsyncs(monkeypatch)
+    led = ImportLedger(str(tmp_path / "ledger.jsonl"))
+    assert led.advance_completed_through([], set()) == []
+    assert led.advance_completed_through(["s-t-0-1.parquet"], {"s-t-0-1.parquet"}) == []
+    assert calls == [] and not os.path.exists(led.path)
